@@ -25,11 +25,6 @@ def xxhash64(*cols: Column | str, seed: int | None = None) -> Column:
     return F.xxhash64(*cs)
 
 
-def hash32(*cols: Column | str) -> Column:
-    """Murmur3 32-bit (Spark's F.hash) ≈ IntHash32 role."""
-    return F.hash(*[F.col(c) if isinstance(c, str) else c for c in cols])
-
-
 _MASK32 = (1 << 32) - 1
 _MASK16 = (1 << 16) - 1
 
@@ -270,13 +265,3 @@ def with_city_hash64(
         )
         df = df.drop(nxt, a)
     return df.withColumnRenamed(acc, out)
-
-
-def md5_hex(col: Column | str) -> Column:
-    """Content fingerprint usable cross-engine (DuckDB md5 matches bit-for-bit;
-    used by dedup_exact so the correctness oracle can reproduce it)."""
-    return F.md5((F.col(col) if isinstance(col, str) else col).cast("binary"))
-
-
-def sha256_hex(col: Column | str) -> Column:
-    return F.sha2((F.col(col) if isinstance(col, str) else col).cast("binary"), 256)

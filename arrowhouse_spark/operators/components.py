@@ -20,141 +20,48 @@ convergence probe is a LIMIT 1 anti-equality join, not a full count.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.operators.idgate import gate_broadcast
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the Hadoop FS API — the portable
-    way to touch store-side files: ``os.path`` silently sees nothing on
-    HDFS/S3A stores, so driver-local checks guarding correctness (meta
-    pins, twin staleness) would never fire exactly where they matter."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    try:
-        # local file:// is a ChecksumFileSystem whose .crc sidecars go
-        # stale if anything else (legacy code, an operator, a human)
-        # touches the file with plain open() — use the raw FS for these
-        # metadata files, matching plain-file behavior; HDFS/S3A have no
-        # getRawFileSystem and keep their native integrity checks
-        fs = fs.getRawFileSystem()
-    except Exception:  # noqa: BLE001 — not a ChecksumFileSystem
-        pass
-    return fs, p
-
-
-def _fs_dir_exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _hadoop_fs(spark, path)
-    return bool(fs.exists(p))
-
-
-def _fs_read_small(spark: SparkSession, path: str) -> bytes | None:
-    """Read a small (metadata-sized) file through the Hadoop FS API; None
-    if absent. The payload crosses py4j ONCE (a byte[] returned from a
-    Java method is converted to Python bytes by py4j), not once per byte —
-    this sits on the pareto ledger's per-micro-batch hot path
-    (streaming/replace.py), where a per-byte loop costs a JVM round-trip
-    per byte."""
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return None
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(p)
-    try:
-        try:
-            # commons-io ships on every Hadoop classpath; toByteArray
-            # returns byte[] → one py4j call for the whole payload
-            return bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        except Exception:  # noqa: BLE001 — exotic classpath: 3-call path
-            n = int(fs.getFileStatus(p).getLen())
-            arr = spark.sparkContext._gateway.new_array(jvm.byte, n)
-            stream.readFully(0, arr)  # position-form: start-independent
-            # Arrays.copyOf RETURNS byte[] → py4j converts it to bytes
-            return bytes(jvm.java.util.Arrays.copyOf(arr, n))
-    finally:
-        stream.close()
-
-
-def _fs_write_small(spark: SparkSession, path: str, payload: bytes) -> None:
-    fs, p = _hadoop_fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
+from arrowhouse_spark.operators.store import (
+    compact_partitions,
+    exists,
+    normalize_ids,
+    read_small,
+    read_store,
+    remove,
+    rewrite_partitions,
+    write_small,
+)
 
 
 def _resolve_n_buckets(
     spark: SparkSession, store_path: str, n_buckets: int | None
-) -> int:
-    """n_buckets from the store's meta file, cross-checked against a
-    caller-passed value (a mismatch is a correctness error: pruning
-    would consult the wrong buckets); meta-less stores require the
-    caller's value."""
-    import json
-
-    meta_raw = _fs_read_small(spark, store_path + "__meta")
-    if meta_raw is not None:
-        stored_n = json.loads(meta_raw.decode("utf-8")).get("n_buckets")
-        if n_buckets is not None and n_buckets != stored_n:
+) -> tuple[int, bool]:
+    """(n_buckets, whether the store has a meta file). The meta file
+    wins and a different caller-passed value is refused: n_buckets is
+    baked into the partition layout, so pruning with another count
+    would consult the wrong buckets (missed merges, scattered rewrites).
+    Meta-less stores take the caller's value."""
+    meta_raw = read_small(spark, store_path + "__meta")
+    if meta_raw is None:
+        if n_buckets is None:
             raise ValueError(
-                f"store {store_path!r} was built with n_buckets="
-                f"{stored_n}; caller passed {n_buckets}"
+                "n_buckets unknown: the store has no meta file — pass the "
+                "value the store was built with"
             )
-        return stored_n
-    if n_buckets is None:
+        return n_buckets, False
+    stored_n = json.loads(meta_raw.decode("utf-8")).get("n_buckets")
+    if n_buckets is not None and n_buckets != stored_n:
         raise ValueError(
-            "n_buckets unknown: the store has no meta file — pass the "
-            "value the store was built with"
+            f"store {store_path!r} was built with n_buckets={stored_n}; "
+            f"caller passed {n_buckets} — keep it constant for the "
+            "store's whole lifecycle"
         )
-    return n_buckets
-
-
-def components_store_presence_count(
-    spark: SparkSession,
-    store_path: str,
-    ids,
-    n_buckets: int | None = None,
-) -> int:
-    """cb-bucket-pruned count of label-store rows whose id is in ``ids``
-    — exactly the rows a :func:`components_store_retract` of the same
-    set removes (relabeling preserves row counts; only removals change
-    them), at DELTA cost: the store is read only at the id set's hash
-    buckets, never scanned whole. Missing store → 0 (checked BEFORE the
-    id set is materialized, so the no-op path costs nothing). A forget
-    sweep does not need this — components_store_retract_counted reports
-    the removed rows in one pass — but standalone audits ("is this id
-    still anywhere?") do."""
-    from arrowhouse_spark.operators.sampling import hash_bucket
-
-    if not _fs_dir_exists(spark, store_path):
-        return 0
-    if not isinstance(ids, DataFrame):
-        from arrowhouse_spark.sources.memory import one_block
-
-        ids = one_block(spark, [(int(i),) for i in ids], "id long")
-    ids = ids.select("id").distinct().localCheckpoint()
-    n_buckets = _resolve_n_buckets(spark, store_path, n_buckets)
-    vbuckets = [
-        r.cb
-        for r in ids.select(
-            hash_bucket("id", n_buckets, salt="cc").alias("cb")
-        )
-        .distinct()
-        .collect()
-    ]
-    return int(
-        spark.read.parquet(store_path)
-        .filter(F.col("cb").isin(vbuckets))
-        .join(gate_broadcast(ids), "id", "semi")
-        .count()
-    )
+    return stored_n, True
 
 
 def connected_components(
@@ -406,44 +313,30 @@ def components_incremental(
     component making every fold touch it) is inherent to the problem,
     not the increment. The reference engine has no graph operators —
     extension surface, same doctrine as operators/graph.py."""
-    import json
-
     from arrowhouse_spark.operators.sampling import hash_bucket
 
     spark = new_edges.sparkSession
     twin_path = store_path + "__bycomp"
-    meta_path = store_path + "__meta"
     e = (
         new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    # Hadoop FS existence check, not a probe read: a missing path
-    # previously surfaced as a caught read exception AFTER Spark logged a
-    # FileStreamSink WARN with a full stack trace (bench-stderr noise),
-    # and the head(1) probe cost one job per fold. ONLY a missing path
-    # means "first fold" — any other read failure (corrupt footer,
-    # transient FS error, permissions) still raises from read.parquet
-    # itself, so a broken history is never silently treated as empty.
-    store = (
-        spark.read.parquet(store_path)
-        if _fs_dir_exists(spark, store_path)
-        else None
-    )
-    # n_buckets is baked into the store's partition layout; a fold with a
-    # different value would prune the wrong cb partitions (missed merges)
-    # and scatter rewrites across mismatched buckets — pin it in a meta
-    # file and refuse mismatches (legacy stores without meta are adopted).
-    # Hadoop FS API, not os.path: on HDFS/S3A stores a local-path check
-    # never fires and the guard would be silently skipped.
-    meta_raw = _fs_read_small(spark, meta_path) if store is not None else None
-    if meta_raw is not None:
-        stored_n = json.loads(meta_raw.decode("utf-8")).get("n_buckets")
-        if stored_n != n_buckets:
+    store = read_store(spark, store_path)
+    has_meta, twin = False, None
+    if store is not None:
+        n_buckets, has_meta = _resolve_n_buckets(spark, store_path, n_buckets)
+        if comp_index:
+            # an unreadable twin (a crashed first twin write) is absent:
+            # this fold full-scans and the write below rebuilds it
+            twin = read_store(spark, twin_path)
+        elif exists(spark, twin_path):
+            # a twin left behind by comp_index=True folds would go
+            # silently STALE here and corrupt a later comp_index=True fold
             raise ValueError(
-                f"store {store_path!r} was built with n_buckets="
-                f"{stored_n}; this fold passed {n_buckets} — keep it "
-                "constant for the store's whole lifecycle"
+                f"store {store_path!r} has a component index twin; "
+                "keep passing comp_index=True for its whole lifecycle "
+                "(or delete the twin directory to drop the index)"
             )
 
     verts = (
@@ -471,25 +364,7 @@ def components_incremental(
             .localCheckpoint()
         )
         members_src = store
-        twin_ok = False
-        if not comp_index:
-            # a twin left behind by comp_index=True folds would go silently
-            # STALE here and corrupt a later comp_index=True fold — refuse.
-            # Hadoop FS existence check, so the refusal fires on object
-            # stores too, exactly where a silent skip would corrupt.
-            if _fs_dir_exists(spark, twin_path):
-                raise ValueError(
-                    f"store {store_path!r} has a component index twin; "
-                    "keep passing comp_index=True for its whole lifecycle "
-                    "(or delete the twin directory to drop the index)"
-                )
-        # FS existence gate instead of a probe read (same WARN-noise and
-        # per-fold head(1) job rationale as the store probe above);
-        # a missing twin = adopting a twin-less store — full-scan this
-        # fold and the write below builds the twin
-        if comp_index and _fs_dir_exists(spark, twin_path):
-            twin = spark.read.parquet(twin_path)
-            twin_ok = True
+        if twin is not None:
             cbuckets = [
                 r.ccb
                 for r in acomps.select(
@@ -538,69 +413,48 @@ def components_incremental(
     if delta.isEmpty():
         return delta.select("id", "component")
 
-    out = delta
+    rows = delta
     if store is not None:
         touched = delta.select("cb").distinct()
-        carry = (
+        rows = delta.unionByName(
             store.join(F.broadcast(touched), "cb", "semi")
             .join(delta.select("id"), "id", "left_anti")
             .select("id", "component", "cb")
-            # pin the carried rows BEFORE the write: `carry` lazily scans
-            # store_path while the write dynamic-overwrites the same path —
-            # self-read-overwrite is fragile without materialization (the
-            # twin path below already checkpoints `tout` for this reason)
-            .localCheckpoint()
         )
-        out = delta.unionByName(carry)
-    (
-        out.repartition("cb")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cb")
-        .parquet(store_path)
-    )
-    if meta_raw is None:
-        _fs_write_small(
-            spark, meta_path, json.dumps({"n_buckets": n_buckets}).encode()
+    # a fold never empties a bucket (cb = hash(id), and every stored id
+    # keeps its row), so there is no drained bucket to look for
+    rewrite_partitions(spark, store_path, rows, "cb", touched=())
+    if not has_meta:
+        write_small(
+            spark,
+            store_path + "__meta",
+            json.dumps({"n_buckets": n_buckets}).encode(),
         )
     if comp_index:
         ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
-        if store is not None and twin_ok:
+        if twin is not None:
             # touched ccb partitions = new positions of the delta rows ∪
             # OLD positions of every affected component (rows that merged
             # away must leave their old bucket when it is rewritten)
-            tccb = (
-                delta.select(ccb)
+            tvals = [
+                r.ccb
+                for r in delta.select(ccb)
                 .unionByName(acomps.select(ccb))
                 .distinct()
-            )
-            tvals = [r.ccb for r in tccb.collect()]
+                .collect()
+            ]
             tcarry = (
-                spark.read.parquet(twin_path)
-                .filter(F.col("ccb").isin(tvals))
+                twin.filter(F.col("ccb").isin(tvals))
                 .join(delta.select("id"), "id", "left_anti")
                 .select("id", "component", "ccb")
             )
-            tout = delta.select("id", "component", ccb).unionByName(
-                tcarry
-            ).localCheckpoint()
-            (
-                tout.repartition("ccb")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ccb")
-                .parquet(twin_path)
+            rewrite_partitions(
+                spark,
+                twin_path,
+                delta.select("id", "component", ccb).unionByName(tcarry),
+                "ccb",
+                tvals,
             )
-            # dynamic overwrite only rewrites partitions PRESENT in tout; a
-            # ccb bucket whose every row merged away receives no rows and
-            # would keep its stale files — drop drained partitions directly
-            # (Hadoop FS API: portable across local/HDFS/S3A)
-            kept_ccb = {r.ccb for r in tout.select("ccb").distinct().collect()}
-            drained = [v for v in tvals if v not in kept_ccb]
-            for v in drained:
-                fs, p = _hadoop_fs(spark, f"{twin_path}/ccb={v}")
-                if fs.exists(p):
-                    fs.delete(p, True)
         else:
             # first fold, or adopting a twin-less store: build the twin
             # from the full labeling just committed
@@ -652,10 +506,10 @@ def components_store_retract_counted(
     Per retract (all pruned, nothing global): locate = cb-bucket-pruned
     semi-join of the id set; members of affected components come from the
     ``__bycomp`` twin's ccb partitions when present (else one map-side
-    full scan, as in components_incremental); the rewrite
-    dynamic-overwrites ONLY buckets holding a removed or relabeled row,
-    with fully-drained partitions dropped via the Hadoop FS API. The twin
-    is kept consistent, including label moves across ccb buckets.
+    full scan, as in components_incremental; an unreadable twin counts
+    as absent); the rewrite touches ONLY buckets holding a removed or
+    relabeled row. The twin is kept consistent, including label moves
+    across ccb buckets.
     Returns (delta, removed): the RELABELED survivors (id, component) —
     empty when no retracted id was a component label — and the number of
     store rows removed (the stored-victim count, computed from the
@@ -671,23 +525,18 @@ def components_store_retract_counted(
     store in this module."""
     from arrowhouse_spark.operators.sampling import hash_bucket
 
-    if not isinstance(ids, DataFrame):
-        from arrowhouse_spark.sources.memory import one_block
-
-        ids = one_block(spark, [(int(i),) for i in ids], "id long")
-    ids = ids.select("id").distinct().localCheckpoint()
-    if not _fs_dir_exists(spark, store_path):
-        return ids.limit(0).withColumn("component", F.col("id")), 0
+    ids = normalize_ids(spark, ids, "id")
+    empty = ids.limit(0).withColumn("component", F.col("id"))
+    store = read_store(spark, store_path)
+    if store is None:
+        return empty, 0
     # count-gate every id-set hint in this op: batch-sized forgets
     # broadcast, retention-sweep-sized sets (≥ idgate.BROADCAST_ID_LIMIT)
     # fall back to shuffle joins — the store side is cb/ccb-pruned at
-    # every site, so the shuffles stay delta-sized (round-11 verdict #1)
+    # every site, so the shuffles stay delta-sized
     ids_j = gate_broadcast(ids)
-    n_buckets = _resolve_n_buckets(spark, store_path, n_buckets)
-    meta_path = store_path + "__meta"
-    store = spark.read.parquet(store_path)
+    n_buckets, _ = _resolve_n_buckets(spark, store_path, n_buckets)
     twin_path = store_path + "__bycomp"
-    empty = ids.limit(0).withColumn("component", F.col("id"))
 
     vbuckets = [
         r.cb
@@ -707,8 +556,8 @@ def components_store_retract_counted(
         return empty, 0  # none of the ids are in the store
     acomps_j = gate_broadcast(acomps, n_rows=n_acomps)
 
-    has_twin = _fs_dir_exists(spark, twin_path)
-    if has_twin:
+    twin = read_store(spark, twin_path)
+    if twin is not None:
         cbuckets = [
             r.ccb
             for r in acomps.select(
@@ -717,9 +566,7 @@ def components_store_retract_counted(
             .distinct()
             .collect()
         ]
-        members_src = spark.read.parquet(twin_path).filter(
-            F.col("ccb").isin(cbuckets)
-        )
+        members_src = twin.filter(F.col("ccb").isin(cbuckets))
     else:
         members_src = store
     members = (
@@ -745,84 +592,51 @@ def components_store_retract_counted(
         gone.unionByName(delta.select("id")).distinct().localCheckpoint()
     )
     touch_ids_j = gate_broadcast(touch_ids)
-    tb = (
-        touch_ids.select(hash_bucket("id", n_buckets, salt="cc").alias("cb"))
+    tvals = [
+        r.cb
+        for r in touch_ids.select(
+            hash_bucket("id", n_buckets, salt="cc").alias("cb")
+        )
         .distinct()
-        .localCheckpoint()
-    )
-    tvals = [r.cb for r in tb.collect()]
+        .collect()
+    ]
     carry = (
         store.filter(F.col("cb").isin(tvals))
         .join(touch_ids_j, "id", "left_anti")
         .select("id", "component", "cb")
-        .localCheckpoint()  # self-read-overwrite discipline
     )
-    out = delta.withColumn(
+    rows = delta.withColumn(
         "cb", hash_bucket("id", n_buckets, salt="cc")
     ).unionByName(carry)
-    (
-        out.repartition("cb")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cb")
-        .parquet(store_path)
-    )
-    kept_cb = {r.cb for r in out.select("cb").distinct().collect()}
-    for v in tvals:
-        if v not in kept_cb:
-            fs, p = _hadoop_fs(spark, f"{store_path}/cb={v}")
-            if fs.exists(p):
-                fs.delete(p, True)
-    # retract-ALL leaves a bucket-less directory no reader can infer a
-    # schema from — a bricked store. Remove the store (and its meta/twin)
-    # entirely: components_incremental treats the missing path as a first
-    # fold, which IS the correct forget-everything state.
-    fs, sdir = _hadoop_fs(spark, store_path)
-    if fs.exists(sdir) and not any(
-        st.getPath().getName().startswith("cb=")
-        for st in fs.listStatus(sdir)
-    ):
-        fs.delete(sdir, True)
-        mfs, mp = _hadoop_fs(spark, meta_path)
-        if mfs.exists(mp):
-            mfs.delete(mp, False)
-        tfs, tp = _hadoop_fs(spark, twin_path)
-        if tfs.exists(tp):
-            tfs.delete(tp, True)
-        return delta.select("id", "component"), n_removed
-
-    if has_twin:
+    if rewrite_partitions(spark, store_path, rows, "cb", tvals):
+        # retract-ALL removed the store; its meta and twin go with it, so
+        # the next components_incremental is a clean first fold — the
+        # correct forget-everything state
+        remove(spark, store_path + "__meta")
+        remove(spark, twin_path)
+    elif twin is not None:
         ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
         # touched ccb = every affected component's OLD bucket ∪ the delta
         # rows' NEW buckets (labels move buckets when the root retires)
-        tccb = (
-            acomps.select(ccb).unionByName(delta.select(ccb)).distinct()
-        )
-        tcvals = [r.ccb for r in tccb.collect()]
+        tcvals = [
+            r.ccb
+            for r in acomps.select(ccb)
+            .unionByName(delta.select(ccb))
+            .distinct()
+            .collect()
+        ]
         tcarry = (
-            spark.read.parquet(twin_path)
-            .filter(F.col("ccb").isin(tcvals))
+            twin.filter(F.col("ccb").isin(tcvals))
             .join(touch_ids_j, "id", "left_anti")
             .select("id", "component", "ccb")
         )
-        tout = (
-            delta.select("id", "component", ccb)
-            .unionByName(tcarry)
-            .localCheckpoint()
+        rewrite_partitions(
+            spark,
+            twin_path,
+            delta.select("id", "component", ccb).unionByName(tcarry),
+            "ccb",
+            tcvals,
         )
-        (
-            tout.repartition("ccb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ccb")
-            .parquet(twin_path)
-        )
-        kept_ccb = {r.ccb for r in tout.select("ccb").distinct().collect()}
-        for v in tcvals:
-            if v not in kept_ccb:
-                fs, p = _hadoop_fs(spark, f"{twin_path}/ccb={v}")
-                if fs.exists(p):
-                    fs.delete(p, True)
     return delta.select("id", "component"), n_removed
 
 
@@ -831,36 +645,18 @@ def compact_components_store(
     store_path: str,
 ) -> dict:
     """Compact the CC label store (and its ``__bycomp`` twin when
-    present): every components_incremental fold dynamic-overwrites only
-    touched buckets, but an overwritten bucket is written by however many
-    tasks carried its rows, so a long-lived store accumulates small files
-    whose open/footer cost comes to dominate the per-fold pruned reads —
-    the compact_band_store problem on the label layout. Rewrite = one
-    hash repartition on the partition column, so each bucket lands in
-    exactly one task → one file per bucket directory; labels are carried
-    BIT-IDENTICAL (pinned in tests). Same stop-the-writer contract as
-    compact_band_store. Returns {"rows", "files_before", "files_after"}."""
-
-    def _compact(path: str, part_col: str) -> tuple[int, int, int]:
-        df = spark.read.parquet(path)
-        fb = df.select(F.input_file_name()).distinct().count()
-        out = df.localCheckpoint()  # self-read-overwrite discipline
-        (
-            out.repartition(part_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_col)
-            .parquet(path)
-        )
-        after = spark.read.parquet(path)
-        return out.count(), fb, after.select(F.input_file_name()).distinct().count()
-
-    rows, fb, fa = _compact(store_path, "cb")
-    res = {"rows": rows, "files_before": fb, "files_after": fa}
+    present): every components_incremental fold rewrites only touched
+    buckets, and a long-lived store accumulates small files whose
+    open/footer cost comes to dominate the per-fold pruned reads — the
+    compact_band_store problem on the label layout. Labels are carried
+    BIT-IDENTICAL (pinned in tests). Single-writer contract. Returns
+    {"rows", "files_before", "files_after"} (plus "twin_rows")."""
+    rows, before, after = compact_partitions(spark, store_path, "cb")
+    res = {"rows": rows, "files_before": before, "files_after": after}
     twin_path = store_path + "__bycomp"
-    if _fs_dir_exists(spark, twin_path):
-        trows, tfb, tfa = _compact(twin_path, "ccb")
+    if exists(spark, twin_path):
+        trows, tbefore, tafter = compact_partitions(spark, twin_path, "ccb")
         res["twin_rows"] = trows
-        res["files_before"] += tfb
-        res["files_after"] += tfa
+        res["files_before"] += tbefore
+        res["files_after"] += tafter
     return res

@@ -169,7 +169,9 @@ def _take_per_source(
     exact: bool,
 ) -> DataFrame:
     """Materialize a (source, n_avail, take_n) plan over ``df`` — the shared
-    back half of source_mixed_sample and temperature_mix_sample."""
+    back half of source_mixed_sample and temperature_mix_sample. ``key``
+    must be unique within a source; the same key may recur across
+    sources, each copy winning or losing in its own source."""
     h = F.md5(F.concat(F.lit(salt), _c(key).cast("string")))
     joined = df.join(F.broadcast(plan), source_col)
     if not exact:
@@ -188,16 +190,17 @@ def _take_per_source(
     # ≤|sources| tasks and serialized the pipeline tail (~2 s single-task
     # stages at sf0.1). The winners then attach back by key at normal
     # join parallelism: decide with small rows, move big rows once
-    # (guide §8). Winner selection depends only on (source, md5, key),
-    # so the surviving set is unchanged.
+    # (guide §8). Winner selection depends only on (source, md5, key).
     w = Window.partitionBy(source_col).orderBy(h, F.col(key))
     winners = (
         joined.select(key, source_col, "take_n")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= F.col("take_n"))
-        .select(key)
+        .select(key, source_col)
     )
-    return joined.join(winners, key, "semi").drop("n_avail", "take_n")
+    return joined.join(winners, [key, source_col], "semi").drop(
+        "n_avail", "take_n"
+    )
 
 
 def temperature_mixing_plan(

@@ -19,6 +19,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.operators.idgate import gate_broadcast
+from arrowhouse_spark.operators.store import (
+    begin_version,
+    commit_version,
+    compact_partitions,
+    normalize_ids,
+    read_store,
+    reset_versions,
+    rewrite_partitions,
+    store_base,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -771,121 +781,6 @@ def _write_centroids(spark: SparkSession, c, path: str) -> None:
     cent_df.write.mode("overwrite").parquet(path)
 
 
-def _store_base(spark: SparkSession, store_path: str) -> str:
-    """Resolve the CURRENT layout root of a (possibly versioned) IVF
-    store. A refit (:func:`ivf_store_refit`) re-fits the coarse
-    quantizer and rewrites every posting under ``store_path/v{n}`` with
-    a one-line JSON pointer at ``store_path/META`` naming the live
-    version; absent META = the legacy root layout every pre-refit store
-    uses. All readers and writers resolve through this, so a version
-    swap is invisible to probes, appends, deletes, and compactions —
-    and a HALF-BUILT v{n+1} directory from a crashed refit is ignored
-    until the META flip commits it.
-
-    MISSING-META fallback: the swap uses FileContext rename-with-
-    OVERWRITE (atomic on HDFS and local), so normally META is never
-    absent mid-swap; on filesystems without FileContext the fallback is
-    delete-pointer → rename, whose microscopic no-META window only
-    arises for v≥1 stores (the first flip creates META fresh) — by then
-    the legacy root is swept, so resolution falls through to the
-    HIGHEST v{n}, which is always complete (the refit fully builds
-    v{n+1} BEFORE touching the pointer). Root centroids present →
-    legacy layout (the normal pre-refit store, where META never
-    existed). A recovery refit entered in the no-META state REWRITES
-    META to the resolved live version before building the next one
-    (ivf_store_refit entry), so readers never depend on highest-v-dir
-    resolution while a rebuild is in progress."""
-    import json
-
-    from arrowhouse_spark.operators.components import (
-        _fs_read_small,
-        _hadoop_fs,
-    )
-
-    raw = _fs_read_small(spark, store_path + "/META")
-    if raw is not None:
-        v = int(json.loads(raw.decode("utf-8"))["version"])
-        return f"{store_path}/v{v}"
-    fs, cp = _hadoop_fs(spark, store_path + "/centroids")
-    if fs.exists(cp):
-        return store_path  # legacy root layout (never refit)
-    fs, sp = _hadoop_fs(spark, store_path)
-    best = 0
-    if fs.exists(sp):
-        for st in fs.listStatus(sp):
-            nm = st.getPath().getName()
-            if nm.startswith("v") and nm[1:].isdigit():
-                best = max(best, int(nm[1:]))
-    return f"{store_path}/v{best}" if best else store_path
-
-
-def _write_meta_pointer(
-    spark: SparkSession, store_path: str, version: int
-) -> None:
-    """Atomically (re)write the ``store_path/META`` version pointer to
-    ``version``: write META.tmp, then FileContext rename-with-OVERWRITE
-    (atomic on HDFS and a plain posix rename locally — NO window with
-    META absent). The Java signature is varargs (Options.Rename...),
-    which py4j accepts only as an explicit Java ARRAY of the component
-    type — passing the bare enum raises a method-not-found Py4JError
-    (round-12 review exposed that the bare call had been silently
-    falling through to the non-atomic path all along).
-
-    On filesystems without FileContext the fallback is delete-pointer →
-    rename, whose microscopic no-META window only arises for v>=1
-    stores; the refit's pre-swap sweep guarantees _store_base's
-    missing-META fallback then resolves the newest COMPLETE v-dir."""
-    import json
-
-    from arrowhouse_spark.operators.components import _hadoop_fs
-
-    payload = json.dumps({"version": int(version)}).encode("utf-8")
-    fs, tmp = _hadoop_fs(spark, store_path + "/META.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-    _fs2, meta = _hadoop_fs(spark, store_path + "/META")
-
-    def _fallback_rename() -> None:
-        if fs.exists(meta):
-            fs.delete(meta, False)
-        if not fs.rename(tmp, meta):
-            raise OSError(f"META pointer rename failed for {store_path!r}")
-
-    try:
-        jvm = spark.sparkContext._jvm
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        ren_cls = jvm.org.apache.hadoop.fs.Options.Rename
-        opts = spark.sparkContext._gateway.new_array(ren_cls, 1)
-        opts[0] = ren_cls.OVERWRITE
-        fc.rename(tmp, meta, opts)
-    except (TypeError, AttributeError):
-        # FileContext absent from the classpath (py4j JavaPackage is
-        # not callable) — capability miss, take the fallback
-        _fallback_rename()
-    except Exception as exc:
-        # only a CAPABILITY error may downgrade to the non-atomic
-        # path; a real IO/permission failure from a supporting FS must
-        # surface, not silently reopen the no-META window (round-12
-        # review finding #3)
-        je = getattr(exc, "java_exception", None)
-        cls = je.getClass().getName() if je is not None else ""
-        if "UnsupportedFileSystem" in cls or "NoClassDefFound" in cls:
-            _fallback_rename()
-        else:
-            raise
-
-
-def _store_version(spark: SparkSession, store_path: str) -> int:
-    """Live version number: 0 = legacy root layout (no META)."""
-    base = _store_base(spark, store_path)
-    return 0 if base == store_path else int(base.rsplit("/v", 1)[1])
-
-
 def ivf_store_init(
     df: DataFrame,
     store_path: str,
@@ -907,19 +802,8 @@ def ivf_store_init(
     versioned layout."""
     import numpy as np
 
-    from arrowhouse_spark.operators.components import _hadoop_fs
-
-    spark0 = df.sparkSession
-    fs, mp = _hadoop_fs(spark0, store_path + "/META")
-    if fs.exists(mp):
-        fs.delete(mp, False)
-    fs, sp = _hadoop_fs(spark0, store_path)
-    if fs.exists(sp):
-        for st in fs.listStatus(sp):
-            nm = st.getPath().getName()
-            if nm.startswith("v") and nm[1:].isdigit():
-                fs.delete(st.getPath(), True)
-
+    spark = df.sparkSession
+    reset_versions(spark, store_path)
     cent_rows = (
         df.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
@@ -928,7 +812,6 @@ def ivf_store_init(
     )
     c = np.array([r[1] for r in cent_rows], dtype=np.float64)
     c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    spark = df.sparkSession
     _write_centroids(spark, c, store_path + "/centroids")
     assigned = _assign_to_centroids(
         df.select(id_col, vec_col), c, vec_col, round_dp=6
@@ -945,14 +828,14 @@ def _ivf_store_centroids(
     spark: SparkSession, store_path: str, base: str | None = None
 ):
     """Centroid matrix of the live layout. ``base`` lets callers that
-    already resolved the version pointer (one _fs_read_small round-trip
-    against remote storage) reuse it instead of re-reading META — the
-    single-writer contract keeps the pointer stable within an op."""
+    already resolved the version pointer (one META read against remote
+    storage) reuse it — the single-writer contract keeps the pointer
+    stable within an op."""
     import numpy as np
 
     rows = (
         spark.read.parquet(
-            (base or _store_base(spark, store_path)) + "/centroids"
+            (base or store_base(spark, store_path)) + "/centroids"
         )
         .orderBy("centroid")
         .collect()
@@ -997,38 +880,11 @@ def _dedupe_ivf_batch(
 def _read_postings(
     spark: SparkSession, store_path: str, base: str | None = None
 ) -> DataFrame | None:
-    """Postings relation of the LIVE layout version (see _store_base), or
-    None for a store whose postings were fully drained (delete-all
-    removes the directory so readers cannot crash on an unreadable empty
-    layout) or never written. ``base``: pre-resolved layout root, same
-    reuse contract as _ivf_store_centroids."""
-    try:
-        df = spark.read.parquet(
-            (base or _store_base(spark, store_path)) + "/postings"
-        )
-        df.schema  # force analysis so inference failures surface HERE
-        return df
-    except Exception as exc:  # noqa: BLE001 — classify, re-raise the rest
-        if _is_missing_store_error(exc):
-            return None
-        raise
-
-
-def _is_missing_store_error(exc: Exception) -> bool:
-    """True when ``exc`` is Spark's missing-path / empty-layout read
-    failure — in EITHER vocabulary: Spark 3.4+ raises error classes
-    (``PATH_NOT_FOUND`` / ``UNABLE_TO_INFER_SCHEMA``), older builds raise
-    plain AnalysisException messages (``Path does not exist`` / ``Unable
-    to infer schema``). Matching only the new classes crashed
-    delete/topk/compact on legacy Spark against a drained or
-    never-written store instead of returning the documented empty-store
-    result (round-11 ADVICE)."""
-    msg = str(exc)
-    return (
-        "PATH_NOT_FOUND" in msg
-        or "UNABLE_TO_INFER_SCHEMA" in msg
-        or "Path does not exist" in msg
-        or "Unable to infer schema" in msg
+    """Postings of the live layout, or None for a store whose postings
+    were fully drained or never written. ``base``: pre-resolved layout
+    root, same reuse contract as _ivf_store_centroids."""
+    return read_store(
+        spark, (base or store_base(spark, store_path)) + "/postings"
     )
 
 
@@ -1083,7 +939,7 @@ def _ivf_store_append_validated(
     instead of paying a second dropDuplicates + conflict-probe job on the
     same rows."""
     if base is None:
-        base = _store_base(spark, store_path)  # resolve the pointer ONCE
+        base = store_base(spark, store_path)  # resolve the pointer ONCE
     c = _ivf_store_centroids(spark, store_path, base=base)
     assigned = _assign_to_centroids(
         deduped, c, vec_col, round_dp=6
@@ -1125,42 +981,31 @@ def ivf_store_delete(
     The store is partitioned by cell, not id, so locating an id costs one
     COLUMN-PRUNED scan of (id, centroid) over the postings — unavoidable
     without an id→cell sidecar, and the honest price of pruned probes.
-    The rewrite itself touches ONLY the cells that carry a deleted id:
-    dynamic partition overwrite of those cells minus the tombstoned rows
-    (the components_incremental store-rewrite pattern), with cells whose
-    every row died dropped via the Hadoop FS API (dynamic overwrite never
-    rewrites a partition it receives no rows for). Deleting an id that
+    The rewrite touches ONLY the cells that carry a deleted id (the
+    touched-partition rewrite of operators/store.py). Deleting an id that
     (erroneously) resides in two cells removes BOTH postings — so delete
     is also the repair tool for a double residency. Returns the number
     of postings removed.
 
-    Run with no concurrent appender — same single-writer contract as the
-    band stores (compact_band_store docstring). ``base``: pre-resolved
-    layout root (the _ivf_store_centroids reuse contract) for callers
-    composing several ops per batch — delete rewrites in place and never
-    flips the pointer, so the composition stays on one layout."""
-    from arrowhouse_spark.operators.components import _hadoop_fs
-
-    if not isinstance(ids, DataFrame):
-        from arrowhouse_spark.sources.memory import one_block
-
-        ids = one_block(spark, [(int(i),) for i in ids], f"{id_col} long")
-    ids = ids.select(id_col).distinct().localCheckpoint(eager=False)
+    Run with no concurrent appender (the single-writer contract).
+    ``base``: pre-resolved layout root (the _ivf_store_centroids reuse
+    contract) for callers composing several ops per batch — delete
+    rewrites in place and never flips the pointer, so the composition
+    stays on one layout."""
+    ids = normalize_ids(spark, ids, id_col)
     if base is None:
-        base = _store_base(spark, store_path)  # resolve the pointer ONCE
+        base = store_base(spark, store_path)  # resolve the pointer ONCE
     store = _read_postings(spark, store_path, base=base)
     if store is None:
         return 0  # already fully drained (or never written)
     # count-gate the hint: batch-sized forgets broadcast; a retention
     # sweep (1e8+ ids) drops to a shuffle join — the store side is
     # column-pruned here and cell-pruned below, so the shuffle is
-    # delta-sized (idgate.BROADCAST_ID_LIMIT; round-11 verdict #1)
+    # delta-sized (idgate.BROADCAST_ID_LIMIT)
     ids_j = gate_broadcast(ids)
     # ONE pass over the column-pruned (id, centroid) scan yields both the
-    # per-cell hit counts (the former semi-join aggregate) and the
-    # per-cell totals that decide which touched cells die entirely — the
-    # latter previously cost a second collect over the survivors after
-    # the rewrite
+    # per-cell hit counts and the per-cell totals that tell which touched
+    # cells die entirely
     stats = (
         store.join(ids_j.withColumn("__hit", F.lit(1)), id_col, "left")
         .groupBy("centroid")
@@ -1171,41 +1016,17 @@ def ivf_store_delete(
     if not stats:
         return 0
     touched = [r.centroid for r in stats]
-    removed = int(sum(r["__n"] for r in stats))
-    kept_cells = {r.centroid for r in stats if r["__t"] > r["__n"]}
-    keep = (
-        store.filter(F.col("centroid").isin(touched))
-        .join(ids_j, id_col, "left_anti")
-        # pin survivors BEFORE the overwrite: `keep` lazily scans the
-        # same path the write replaces (self-read-overwrite discipline)
-        .localCheckpoint()
+    rewrite_partitions(
+        spark,
+        base + "/postings",
+        store.filter(F.col("centroid").isin(touched)).join(
+            ids_j, id_col, "left_anti"
+        ),
+        "centroid",
+        touched,
+        kept=[r.centroid for r in stats if r["__t"] > r["__n"]],
     )
-    (
-        keep.repartition("centroid")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("centroid")
-        .parquet(base + "/postings")
-    )
-    for cell in touched:
-        if cell not in kept_cells:
-            fs, p = _hadoop_fs(
-                spark, f"{base}/postings/centroid={cell}"
-            )
-            if fs.exists(p):
-                fs.delete(p, True)
-    # delete-ALL leaves a directory with no parquet files — unreadable
-    # (UNABLE_TO_INFER_SCHEMA) and thus a bricked store. Remove the
-    # postings dir entirely: readers treat the missing dir as an empty
-    # store (the documented GDPR forget-everything state; the frozen
-    # centroids remain, so the next append rebuilds postings cleanly).
-    fs, pdir = _hadoop_fs(spark, base + "/postings")
-    if fs.exists(pdir) and not any(
-        st.getPath().getName().startswith("centroid=")
-        for st in fs.listStatus(pdir)
-    ):
-        fs.delete(pdir, True)
-    return removed
+    return int(sum(r["__n"] for r in stats))
 
 
 def ivf_store_upsert(
@@ -1267,7 +1088,7 @@ def ivf_store_upsert(
         )
     # resolve the version pointer ONCE for both legs (delete rewrites in
     # place, never flips it — single-writer contract)
-    base = _store_base(spark, store_path)
+    base = store_base(spark, store_path)
     # Assign the batch against the frozen centroids BEFORE the delete: the
     # assignment reads only the validated batch + the broadcast centroid
     # matrix, never the postings, so its materializing collect can run
@@ -1318,27 +1139,9 @@ def _ivf_store_upsert_atomic(
     id_col: str,
 ) -> DataFrame:
     """The ``atomic=True`` leg of :func:`ivf_store_upsert`: stage
-    (survivors ∪ re-assigned batch) under the next version directory,
-    then flip the META pointer — single commit point, no behind state.
-    Shares the refit's crash-recovery discipline verbatim: the no-META
-    double-fault repair on entry, the stale half-built v{n+1} sweep, the
-    PRE-flip dead-layout sweep (a leaked legacy root would win
-    _store_base's missing-META fallback and resurrect stale data), and
-    the POST-flip removal of the old layout. Single-writer contract."""
-    from arrowhouse_spark.operators.components import (
-        _fs_read_small,
-        _hadoop_fs,
-    )
-
-    base = _store_base(spark, store_path)  # resolve the pointer ONCE
-    old_v = 0 if base == store_path else int(base.rsplit("/v", 1)[1])
-    new_v = old_v + 1
-    if old_v >= 1 and _fs_read_small(spark, store_path + "/META") is None:
-        # same recovery as ivf_store_refit: pin the resolved version back
-        # into META before building v{n+1}, so no concurrent reader ever
-        # resolves the half-built directory via the highest-v-dir
-        # fallback while this build is in progress
-        _write_meta_pointer(spark, store_path, old_v)
+    (survivors ∪ re-assigned batch) as the next version of the store,
+    then commit it — single commit point, no behind state."""
+    base, staged, version = begin_version(spark, store_path)
     c = _ivf_store_centroids(spark, store_path, base=base)
     assigned = _assign_to_centroids(
         deduped, c, vec_col, round_dp=6
@@ -1352,14 +1155,10 @@ def _ivf_store_upsert_atomic(
     else:  # fully-drained store: the batch IS the new postings
         merged = assigned
 
-    new_base = f"{store_path}/v{new_v}"
-    fs, nb = _hadoop_fs(spark, new_base)
-    if fs.exists(nb):  # stale half-built dir from a crashed attempt
-        fs.delete(nb, True)
     # the two staged writes land in DIFFERENT directories and both must
-    # simply complete before the pointer flip — submit the small
-    # centroids copy from a driver thread so it back-fills executors
-    # while the postings merge runs (guide §2.6)
+    # simply complete before the commit — submit the small centroids copy
+    # from a driver thread so it back-fills executors while the postings
+    # merge runs (guide §2.6)
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -1367,46 +1166,16 @@ def _ivf_store_upsert_atomic(
             lambda: spark.read.parquet(base + "/centroids")
             .coalesce(1)
             .write.mode("overwrite")
-            .parquet(new_base + "/centroids")
+            .parquet(staged + "/centroids")
         )
         (
             merged.repartition("centroid")
             .write.mode("overwrite")
             .partitionBy("centroid")
-            .parquet(new_base + "/postings")
+            .parquet(staged + "/postings")
         )
         cfut.result()
-
-    # PRE-flip dead-layout sweep (refit step 3a): anything that is
-    # neither the live old_v nor the just-built new_v is provably dead
-    if old_v >= 1:
-        for leg in ("/centroids", "/postings"):
-            lfs, lp = _hadoop_fs(spark, store_path + leg)
-            if lfs.exists(lp):
-                lfs.delete(lp, True)
-    sfs, sp = _hadoop_fs(spark, store_path)
-    for st in sfs.listStatus(sp):
-        nm = st.getPath().getName()
-        if (
-            nm.startswith("v")
-            and nm[1:].isdigit()
-            and int(nm[1:]) not in (old_v, new_v)
-        ):
-            sfs.delete(st.getPath(), True)
-
-    _write_meta_pointer(spark, store_path, new_v)  # the ONE commit point
-
-    # POST-flip: remove the now-dead old layout (failure here leaves
-    # only garbage for the next attempt's sweep, never a wrong store)
-    if old_v == 0:
-        for leg in ("/centroids", "/postings"):
-            lfs, lp = _hadoop_fs(spark, store_path + leg)
-            if lfs.exists(lp):
-                lfs.delete(lp, True)
-    else:
-        ofs, op = _hadoop_fs(spark, f"{store_path}/v{old_v}")
-        if ofs.exists(op):
-            ofs.delete(op, True)
+    commit_version(spark, store_path, version)
     return assigned
 
 
@@ -1427,7 +1196,7 @@ def ivf_store_topk(
     exact brute force over the whole store."""
     import numpy as np
 
-    base = _store_base(spark, store_path)  # resolve the pointer ONCE
+    base = store_base(spark, store_path)  # resolve the pointer ONCE
     c = _ivf_store_centroids(spark, store_path, base=base)
     q = np.asarray(list(query), dtype=np.float64)
     q /= max(np.linalg.norm(q), 1e-12)
@@ -1503,33 +1272,15 @@ def compact_ivf_store(spark: SparkSession, store_path: str) -> dict:
     writes its own file-set into each touched cell (parquet append under
     partitionBy), so a daily-ingest store accumulates small files whose
     open/footer cost comes to dominate the pruned probes — the
-    compact_band_store problem on the cell layout. Rewrite = one hash
-    repartition on the cell column, so each cell lands in exactly one
-    task → one file per cell directory; postings are carried BIT-IDENTICAL
-    (pinned in tests) and the centroids relation is untouched (the frozen
-    quantizer never fragments — it is one coalesced file from init).
-    Same stop-the-writer contract as every store compaction in this
-    engine. Returns {"rows", "files_before", "files_after"}."""
-    base = _store_base(spark, store_path)  # resolve the pointer ONCE
-    path = base + "/postings"
-    df = _read_postings(spark, store_path, base=base)
-    if df is None:  # fully-drained store: nothing to compact
-        return {"rows": 0, "files_before": 0, "files_after": 0}
-    files_before = df.select(F.input_file_name()).distinct().count()
-    out = df.localCheckpoint()  # self-read-overwrite discipline
-    (
-        out.repartition("centroid")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("centroid")
-        .parquet(path)
+    compact_band_store problem on the cell layout. Postings are carried
+    BIT-IDENTICAL (pinned in tests) and the centroids relation is
+    untouched (the frozen quantizer never fragments — it is one coalesced
+    file from init). Single-writer contract. Returns {"rows",
+    "files_before", "files_after"}; a fully-drained store is all zeros."""
+    rows, before, after = compact_partitions(
+        spark, store_base(spark, store_path) + "/postings", "centroid"
     )
-    after = spark.read.parquet(path)
-    return {
-        "rows": out.count(),
-        "files_before": files_before,
-        "files_after": after.select(F.input_file_name()).distinct().count(),
-    }
+    return {"rows": rows, "files_before": before, "files_after": after}
 
 
 def _fit_centroids_distributed(
@@ -1636,27 +1387,15 @@ def ivf_store_refit(
          the cell-partitioned write) into the NEXT version directory
          ``store_path/v{n+1}/{centroids,postings}`` — the live layout
          keeps serving probes throughout.
-      3. SWAP: atomically flip the ``store_path/META`` version pointer
-         (write META.tmp, Hadoop rename — atomic on HDFS and local FS),
-         then remove the old layout. Every reader/writer resolves
-         through _store_base, so the swap is invisible to callers.
-
-    CRASH RECOVERY (pinned in tests/test_clustering.py): a failure
-    before the META flip leaves a stale half-built v{n+1} directory
-    that readers IGNORE (META still names the old layout) and a re-run
-    deletes and rebuilds; a failure after the flip but before cleanup
-    leaves dead old-layout directories that the next refit (or this
-    one re-run) sweeps. Either way re-running the refit heals the
-    store. Single-writer contract, as for every store mutation here.
+      3. SWAP: commit the new version (operators/store.py), so the swap
+         is invisible to callers. Re-running a refit that crashed at any
+         point heals the store (pinned in tests/test_clustering.py).
+         Single-writer contract, as for every store mutation.
 
     Returns {"old_version", "new_version", "n_centroids", "rows"}."""
-    import json
-
     import numpy as np
 
-    from arrowhouse_spark.operators.components import _hadoop_fs
-
-    base = _store_base(spark, store_path)  # resolve the pointer ONCE
+    base, staged, version = begin_version(spark, store_path)
     store = _read_postings(spark, store_path, base=base)
     if store is None:
         raise ValueError(
@@ -1664,20 +1403,6 @@ def ivf_store_refit(
             "(fully-drained or never-written postings have nothing to "
             "fit; use ivf_store_init)"
         )
-    old_v = 0 if base == store_path else int(base.rsplit("/v", 1)[1])
-    new_v = old_v + 1
-    if old_v >= 1:
-        from arrowhouse_spark.operators.components import _fs_read_small
-
-        if _fs_read_small(spark, store_path + "/META") is None:
-            # RECOVERY: a crashed non-FileContext fallback flip died
-            # between META delete and rename, so readers are resolving
-            # through the highest-v-dir fallback. Pin the resolved live
-            # version back into META BEFORE building v{n+1} — otherwise
-            # concurrent readers would resolve the half-built v{n+1} as
-            # "highest v-dir" while this rebuild is in progress
-            # (round-12 ADVICE: the double-fault window).
-            _write_meta_pointer(spark, store_path, old_v)
     if n_centroids is None:
         n_centroids = int(
             spark.read.parquet(base + "/centroids").count()
@@ -1719,12 +1444,8 @@ def ivf_store_refit(
             c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
     n_centroids = len(c)  # k-means-- may shrink the distributed fit
 
-    # ---- 2. rebuild the full postings under the next version dir
-    new_base = f"{store_path}/v{new_v}"
-    fs, nb = _hadoop_fs(spark, new_base)
-    if fs.exists(nb):  # stale half-built dir from a crashed attempt
-        fs.delete(nb, True)
-    _write_centroids(spark, c, new_base + "/centroids")
+    # ---- 2. rebuild the full postings as the next version
+    _write_centroids(spark, c, staged + "/centroids")
     reassigned = _assign_to_centroids(
         store.select(id_col, vec_col), c, vec_col, round_dp=6
     ).localCheckpoint(eager=False)
@@ -1736,49 +1457,12 @@ def ivf_store_refit(
         reassigned.repartition("centroid")
         .write.mode("overwrite")
         .partitionBy("centroid")
-        .parquet(new_base + "/postings")
+        .parquet(staged + "/postings")
     )
-
-    # ---- 3a. PRE-swap dead-layout sweep: any layout that is neither
-    # the live old_v nor the just-built new_v is provably dead — a
-    # previous refit that crashed between its flip and its cleanup left
-    # it behind. Sweeping BEFORE the pointer flip matters: a leaked
-    # legacy root is worse than disk waste, because if THIS swap's
-    # non-atomic fallback path crashes mid-flip, _store_base's
-    # missing-META fallback prefers root centroids over the newest
-    # v-dir and readers would resurrect stale v0 data (round-12 review
-    # finding #2).
-    if old_v >= 1:  # META names v{old_v}, so the root layout is dead
-        for leg in ("/centroids", "/postings"):
-            lfs, lp = _hadoop_fs(spark, store_path + leg)
-            if lfs.exists(lp):
-                lfs.delete(lp, True)
-    sfs, sp = _hadoop_fs(spark, store_path)
-    for st in sfs.listStatus(sp):
-        nm = st.getPath().getName()
-        if (
-            nm.startswith("v")
-            and nm[1:].isdigit()
-            and int(nm[1:]) not in (old_v, new_v)
-        ):
-            sfs.delete(st.getPath(), True)
-
-    # ---- 3b. atomic pointer swap
-    _write_meta_pointer(spark, store_path, new_v)
-
-    # ---- 3c. POST-swap: remove the now-dead old layout
-    if old_v == 0:
-        for leg in ("/centroids", "/postings"):
-            lfs, lp = _hadoop_fs(spark, store_path + leg)
-            if lfs.exists(lp):
-                lfs.delete(lp, True)
-    else:
-        ofs, op = _hadoop_fs(spark, f"{store_path}/v{old_v}")
-        if ofs.exists(op):
-            ofs.delete(op, True)
+    commit_version(spark, store_path, version)
     return {
-        "old_version": old_v,
-        "new_version": new_v,
+        "old_version": version,
+        "new_version": version + 1,
         "n_centroids": int(n_centroids),
         "rows": int(n_rows),
     }
@@ -1813,7 +1497,7 @@ def ivf_store_maintain(
     resolves ONCE and threads through append and drift. Returns
     {"appended", "mean_best_cos", "refit": None | ivf_store_refit's
     result dict}."""
-    base = _store_base(spark, store_path)
+    base = store_base(spark, store_path)
     appended = ivf_store_append(
         new_df, store_path, vec_col=vec_col, id_col=id_col, base=base
     )

@@ -116,12 +116,9 @@ def shard_store_retract(
     Locating needs no ``n_shards``/salt parameter: one COLUMN-PRUNED
     scan of (id, shard) off the store itself collects the touched
     shards and the removal count (the scd2_store_retract locate
-    discipline). The rewrite dynamic-overwrites ONLY the touched
-    ``shard=K`` partitions, repartitioned one-task-per-shard and sorted
-    by id — the surviving file keeps the writer's byte-stable layout —
-    with fully-drained partitions dropped via the Hadoop FS API and a
-    full drain removing the directory. The id set rides the
-    count-gated broadcast (operators/idgate.py).
+    discipline). The rewrite touches ONLY the touched ``shard=K``
+    partitions (operators/store.py), one file per shard sorted by id —
+    the surviving file keeps the writer's byte-stable layout.
 
     The manifest needs NO separate repair: :func:`shard_manifest`
     certifies what is ON DISK by re-reading, so re-running it after a
@@ -131,16 +128,8 @@ def shard_store_retract(
     (re-issue the manifest with the deletion request's audit record).
     Unknown ids no-op; idempotent across retries. Returns the number of
     documents removed. Single-writer contract, as for every store."""
-    from arrowhouse_spark.operators.retract import (
-        partitioned_store_retract,
-    )
+    from arrowhouse_spark.operators.store import partitioned_store_retract
 
     return partitioned_store_retract(
-        spark,
-        path,
-        ids,
-        id_col,
-        "shard",
-        repartition_by_count=True,  # one task -> one byte-stable file
-        sort_col=id_col,
+        spark, path, ids, id_col, "shard", sort_col=id_col
     )

@@ -776,15 +776,10 @@ def _scd2_process_batch(
     events = batch_df.select(*keys, ts_col, attr_col, tie_col).withColumn(
         "kb", hash_bucket(keys[0], n_buckets, salt="scd2")
     )
-    # Hadoop FS existence check, not a probe read: the missing-path read
-    # made Spark log a FileStreamSink WARN with a full stack trace (bench
-    # stderr noise), and head(1) cost one job per batch; real read
-    # failures on an existing store still raise from read.parquet itself
-    from arrowhouse_spark.operators.components import _fs_dir_exists
+    from arrowhouse_spark.operators.store import read_store
 
-    if _fs_dir_exists(spark, store_path):
-        store = spark.read.parquet(store_path)
-    else:
+    store = read_store(spark, store_path)
+    if store is None:
         if batch_id > 0:
             raise RuntimeError(
                 f"scd2 store {store_path!r} is missing but batch_id="
@@ -792,7 +787,6 @@ def _scd2_process_batch(
                 "rebuild from nothing (same contract as the minhash "
                 "band store)"
             )
-        store = None
     akeys = events.select(*keys, "kb").distinct()
     if store is not None:
         prior = store.join(F.broadcast(akeys.select(*keys)), keys, "semi")
@@ -1008,18 +1002,16 @@ def _pareto_process_batch(
 
     from pyspark.sql import functions as F
 
-    from arrowhouse_spark.operators.components import (
-        _fs_read_small,
-        _fs_write_small,
-        _hadoop_fs,
-    )
     from arrowhouse_spark.operators.skyline import pareto_frontier
+    from arrowhouse_spark.operators.store import (
+        hadoop_fs,
+        read_small,
+        write_small,
+    )
 
     spark = batch_df.sparkSession
     ledger = store_path + "__last_batch"
-    # Hadoop FS API (not os.path): on HDFS/S3A stores a local-path ledger
-    # check silently never fires, and every replayed batch double-counts
-    raw_b = _fs_read_small(spark, ledger)
+    raw_b = read_small(spark, ledger)
     if raw_b is not None:
         raw = raw_b.decode("utf-8").strip()
         try:
@@ -1050,7 +1042,7 @@ def _pareto_process_batch(
             )
         if batch_id <= led_last:
             return  # replayed batch: already folded
-    _fs, _sp = _hadoop_fs(spark, store_path)
+    _fs, _sp = hadoop_fs(spark, store_path)
     have_store = _fs.exists(_sp) and any(
         st.getPath().getName().endswith(".parquet")
         or st.getPath().getName().startswith("part-")
@@ -1085,7 +1077,7 @@ def _pareto_process_batch(
     final = spark.read.parquet(tmp)
     final.write.mode("overwrite").parquet(store_path)
     # fold recorded AFTER the store write
-    _fs_write_small(
+    write_small(
         spark,
         ledger,
         json.dumps({"run_key": run_key, "last_batch": batch_id}).encode(),
@@ -1333,9 +1325,8 @@ def band_store_retract(
     Works on any band-store shape keyed by ``id_col`` — the minhash
     store's (id, minhash, band, bucket) and the dHash store's
     (id, dhash, band, key) alike. Batch-id-partitioned stores rewrite
-    ONLY the partitions holding a retracted row (dynamic overwrite,
-    drained partitions dropped via the Hadoop FS API, the
-    components_store_retract discipline); legacy unpartitioned stores
+    ONLY the partitions holding a retracted row (the touched-partition
+    rewrite of operators/store.py); legacy unpartitioned stores
     rewrite in full (they have no pruning axis — migrate via
     compact_band_store). Retracting every id removes the store
     directory: stream_minhash_neardup would otherwise refuse the
@@ -1345,43 +1336,32 @@ def band_store_retract(
     full forget = full restart, which is what it is semantically).
     Returns the number of band rows removed. Single-writer contract:
     run with the stream stopped, as for compact_band_store."""
-    from arrowhouse_spark.operators.components import _hadoop_fs
     from arrowhouse_spark.operators.idgate import gate_broadcast
-    from arrowhouse_spark.operators.retract import (
+    from arrowhouse_spark.operators.store import (
         normalize_ids,
         partitioned_store_retract,
-    )
-    from arrowhouse_spark.operators.similarity import (
-        _is_missing_store_error,
+        read_store,
+        remove,
     )
 
-    ids = normalize_ids(spark, ids, id_col)
-    try:
-        store = spark.read.parquet(store_path)
-        store.schema
-    except Exception as exc:  # noqa: BLE001
-        if _is_missing_store_error(exc):
-            return 0
-        raise
-    if "batch_id" not in store.columns:
-        # legacy unpartitioned layout: no pruning axis — rewrite whole
-        ids_j = gate_broadcast(ids)
-        hitn = store.join(ids_j, id_col, "semi").count()
-        if hitn == 0:
-            return 0
-        keep = store.join(ids_j, id_col, "left_anti").localCheckpoint()
-        if keep.isEmpty():
-            fs, p = _hadoop_fs(spark, store_path)
-            fs.delete(p, True)
-            return int(hitn)
+    store = read_store(spark, store_path)
+    if store is None:
+        return 0
+    if "batch_id" in store.columns:
+        return partitioned_store_retract(
+            spark, store_path, ids, id_col, "batch_id"
+        )
+    # legacy unpartitioned layout: no pruning axis — rewrite whole
+    ids_j = gate_broadcast(normalize_ids(spark, ids, id_col))
+    hitn = store.join(ids_j, id_col, "semi").count()
+    if hitn == 0:
+        return 0
+    keep = store.join(ids_j, id_col, "left_anti").localCheckpoint()
+    if keep.isEmpty():
+        remove(spark, store_path)
+    else:
         keep.write.mode("overwrite").parquet(store_path)
-        return int(hitn)
-    # batch_id-partitioned layout: the shared pruned-retract sequence
-    # (operators/retract.py — count-gated broadcast, touched-partition
-    # dynamic overwrite, drained-dir and full-drain removal)
-    return partitioned_store_retract(
-        spark, store_path, ids, id_col, "batch_id"
-    )
+    return int(hitn)
 
 
 def scd2_store_retract(
@@ -1401,10 +1381,9 @@ def scd2_store_retract(
     Locating the keys needs NO n_buckets parameter (the store's bucket
     count lives only in the stream's config): one COLUMN-PRUNED scan of
     (key, kb) collects the touched buckets — the ivf_store_delete locate
-    discipline — then the rewrite dynamic-overwrites ONLY those buckets
-    minus the retracted keys' rows, with fully-drained partitions
-    dropped via the Hadoop FS API and a full drain removing the store
-    directory (the stream's missing-store-at-batch>0 refusal then
+    discipline — then the rewrite touches ONLY those buckets
+    (operators/store.py); a full drain removes the store directory
+    (the stream's missing-store-at-batch>0 refusal then
     applies: full forget = fresh checkpoint restart, as for the band
     stores). The key set rides the count-gated broadcast
     (operators/idgate.py), so retention-sweep-sized requests fall back
@@ -1412,9 +1391,7 @@ def scd2_store_retract(
     are a no-op; idempotent across retries. Returns the number of
     history rows removed. Single-writer contract: run with the stream
     stopped."""
-    from arrowhouse_spark.operators.retract import (
-        partitioned_store_retract,
-    )
+    from arrowhouse_spark.operators.store import partitioned_store_retract
 
     return partitioned_store_retract(
         spark, store_path, keys, key_col, "kb"

@@ -96,9 +96,8 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from arrowhouse_spark.operators.dedup import dedup_incremental
     from arrowhouse_spark.operators.forget import forget_ids
-    from arrowhouse_spark.operators.similarity import _read_postings
-
     from arrowhouse_spark.operators.similarity import ivf_store_init
+    from arrowhouse_spark.operators.store import read_store, store_base
     from arrowhouse_spark.sources.shards import write_training_shards
     from arrowhouse_spark.streaming.replace import _scd2_process_batch
 
@@ -206,7 +205,12 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_specs = {
             "band": (lambda: spark.read.parquet(band_store), "doc_id"),
             "fingerprint": (lambda: spark.read.parquet(fp_store), "doc_id"),
-            "ivf": (lambda: _read_postings(spark, ivf_store), "vec_id"),
+            "ivf": (
+                lambda: read_store(
+                    spark, store_base(spark, ivf_store) + "/postings"
+                ),
+                "vec_id",
+            ),
             "components": (lambda: spark.read.parquet(cc_store), "id"),
             "scd2": (lambda: spark.read.parquet(scd2_store), "user_id"),
             "shard": (lambda: spark.read.parquet(shard_store), "doc_id"),

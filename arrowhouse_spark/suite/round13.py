@@ -316,12 +316,12 @@ def ivf_store_upsert_atomic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from arrowhouse_spark.operators.similarity import (
-        _store_version,
         ivf_store_append,
         ivf_store_init,
         ivf_store_topk,
         ivf_store_upsert,
     )
+    from arrowhouse_spark.operators.store import store_version
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
@@ -334,7 +334,7 @@ def ivf_store_upsert_atomic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_store_init(emb.filter(F.col("vec_id") % 3 == 0), store, n_centroids=8)
         ivf_store_append(emb.filter(F.col("vec_id") % 3 != 0), store)
         ivf_store_upsert(moved, store, atomic=True)
-        v = _store_version(spark, store)
+        v = store_version(spark, store)
         return (
             ivf_store_topk(spark, store, qvec, k=20, nprobe=8)
             .withColumn("store_version", F.lit(int(v)).cast("int"))

@@ -474,14 +474,13 @@ def test_ivf_store_refit_versioned_swap_and_recovery(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from arrowhouse_spark.operators.similarity import (
-        _store_base,
-        _store_version,
         ivf_store_append,
         ivf_store_delete,
         ivf_store_init,
         ivf_store_refit,
         ivf_store_topk,
     )
+    from arrowhouse_spark.operators.store import store_base, store_version
 
     dim = 8
 
@@ -539,14 +538,14 @@ def test_ivf_store_refit_versioned_swap_and_recovery(spark, tmp_path):
     os.makedirs(store + "/v1/postings", exist_ok=True)
     with open(store + "/v1/postings/garbage", "w") as fh:
         fh.write("not parquet")
-    assert _store_base(spark, store) == store
+    assert store_base(spark, store) == store
     assert ids(2) == exact_before
 
     # refit: sweeps the stale dir, re-fits, re-assigns, swaps, cleans up
     res = ivf_store_refit(spark, store, n_centroids=2, seed=5)
     assert (res["old_version"], res["new_version"]) == (0, 1)
     assert res["rows"] == 80
-    assert _store_version(spark, store) == 1
+    assert store_version(spark, store) == 1
     assert not os.path.exists(store + "/postings")  # old layout removed
     assert not os.path.exists(store + "/centroids")
     assert os.path.exists(store + "/META")
@@ -559,7 +558,7 @@ def test_ivf_store_refit_versioned_swap_and_recovery(spark, tmp_path):
     # mid-swap crash (META lost after old-layout removal): the fallback
     # resolves the newest complete layout and probes keep working
     os.remove(store + "/META")
-    assert _store_base(spark, store).endswith("/v1")
+    assert store_base(spark, store).endswith("/v1")
     assert ids(1) == exact_before
     res2 = ivf_store_refit(spark, store, n_centroids=2, seed=5)
     assert (res2["old_version"], res2["new_version"]) == (1, 2)
@@ -598,7 +597,7 @@ def test_ivf_store_refit_versioned_swap_and_recovery(spark, tmp_path):
     before_rows = sorted(
         (r.vec_id, tuple(r.embedding), r.centroid)
         for r in spark.read.parquet(
-            _store_base(spark, store) + "/postings"
+            store_base(spark, store) + "/postings"
         ).collect()
     )
     res3 = compact_ivf_store(spark, store)
@@ -606,14 +605,14 @@ def test_ivf_store_refit_versioned_swap_and_recovery(spark, tmp_path):
     after_rows = sorted(
         (r.vec_id, tuple(r.embedding), r.centroid)
         for r in spark.read.parquet(
-            _store_base(spark, store) + "/postings"
+            store_base(spark, store) + "/postings"
         ).collect()
     )
     assert after_rows == before_rows
 
     # re-init resets to generation zero (META + v* swept)
     ivf_store_init(spark.createDataFrame(a, SCHEMA), store, n_centroids=2)
-    assert _store_version(spark, store) == 0
+    assert store_version(spark, store) == 0
     assert not os.path.exists(store + "/v2")
 
 
@@ -631,6 +630,7 @@ def test_ivf_store_refit_no_meta_recovery_pins_live_version(spark, tmp_path):
     import pytest
 
     from arrowhouse_spark.operators import similarity as sim
+    from arrowhouse_spark.operators import store as st
 
     dim = 4
     rows = [
@@ -644,7 +644,7 @@ def test_ivf_store_refit_no_meta_recovery_pins_live_version(spark, tmp_path):
 
     # simulate the crashed fallback flip: META gone, v1 is the live layout
     os.remove(store + "/META")
-    assert sim._store_base(spark, store).endswith("/v1")
+    assert st.store_base(spark, store).endswith("/v1")
 
     real_assign = sim._assign_to_centroids
 
@@ -662,13 +662,13 @@ def test_ivf_store_refit_no_meta_recovery_pins_live_version(spark, tmp_path):
     # reader depended on highest-v-dir resolution during the (dead) build
     with open(store + "/META", "rb") as fh:
         assert json.loads(fh.read().decode("utf-8"))["version"] == 1
-    assert sim._store_base(spark, store).endswith("/v1")
+    assert st.store_base(spark, store).endswith("/v1")
 
     # a clean re-run heals the store completely
     res = sim.ivf_store_refit(spark, store, n_centroids=2)
     assert (res["old_version"], res["new_version"]) == (1, 2)
     assert res["rows"] == 24
-    assert sim._store_version(spark, store) == 2
+    assert st.store_version(spark, store) == 2
 
 
 def test_ivf_store_maintain_triggers_refit_on_drift(spark, tmp_path):
@@ -679,11 +679,11 @@ def test_ivf_store_maintain_triggers_refit_on_drift(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from arrowhouse_spark.operators.similarity import (
-        _store_version,
         ivf_store_init,
         ivf_store_maintain,
         ivf_store_topk,
     )
+    from arrowhouse_spark.operators.store import store_version
 
     dim = 8
 
@@ -704,7 +704,7 @@ def test_ivf_store_maintain_triggers_refit_on_drift(spark, tmp_path):
     )
     assert r1["appended"] == 10 and r1["refit"] is None
     assert r1["mean_best_cos"] > 0.55
-    assert _store_version(spark, store) == 0
+    assert store_version(spark, store) == 0
 
     # drifted batch (opposite hemisphere): mean-best-cos collapses,
     # maintain refits and the new quantizer separates the clusters
@@ -715,7 +715,7 @@ def test_ivf_store_maintain_triggers_refit_on_drift(spark, tmp_path):
     assert r2["appended"] == 40
     assert r2["mean_best_cos"] < 0.0  # opposite hemisphere
     assert r2["refit"] is not None and r2["refit"]["new_version"] == 1
-    assert _store_version(spark, store) == 1
+    assert store_version(spark, store) == 1
     q = vec(5, 11, -1.0)
     one = {r.vec_id for r in ivf_store_topk(spark, store, q, k=10, nprobe=1).collect()}
     ex = {r.vec_id for r in ivf_store_topk(spark, store, q, k=10, nprobe=2).collect()}
@@ -730,7 +730,7 @@ def test_ivf_store_maintain_triggers_refit_on_drift(spark, tmp_path):
         min_mean_cos=0.99,
     )
     assert r3 == {"appended": 0, "mean_best_cos": None, "refit": None}
-    assert _store_version(spark, store) == 1  # untouched
+    assert store_version(spark, store) == 1  # untouched
 
 
 def test_ivf_store_upsert_atomic_single_commit_point(spark, tmp_path, monkeypatch):
@@ -745,6 +745,7 @@ def test_ivf_store_upsert_atomic_single_commit_point(spark, tmp_path, monkeypatc
     from pyspark.sql import functions as F
 
     from arrowhouse_spark.operators import similarity as sim
+    from arrowhouse_spark.operators import store as st
 
     n, dim = 120, 8
     base = spark.range(n).select(
@@ -784,27 +785,27 @@ def test_ivf_store_upsert_atomic_single_commit_point(spark, tmp_path, monkeypatc
     )
 
     # ---- fault injection: the job dies AT the commit point
-    real_flip = sim._write_meta_pointer
+    real_flip = st._write_meta_pointer
 
     def boom(*a, **k):
         raise RuntimeError("injected crash at META flip")
 
-    monkeypatch.setattr(sim, "_write_meta_pointer", boom)
+    monkeypatch.setattr(st, "_write_meta_pointer", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         sim.ivf_store_upsert(batch, store, atomic=True)
     # the live store is byte-identical: same version, same postings,
     # same probe — NO behind state (the two-commit default would be
     # missing id 0 here)
-    assert sim._store_version(spark, store) == 0
+    assert st.store_version(spark, store) == 0
     assert postings() == before
     assert probe() == probe_before
     assert os.path.exists(store + "/v1")  # half-built staging, ignored
 
     # ---- re-run heals: sweeps the stale v1, stages again, flips
-    monkeypatch.setattr(sim, "_write_meta_pointer", real_flip)
+    monkeypatch.setattr(st, "_write_meta_pointer", real_flip)
     appended = sim.ivf_store_upsert(batch, store, atomic=True)
     assert appended.count() == 2
-    assert sim._store_version(spark, store) == 1
+    assert st.store_version(spark, store) == 1
     after = postings()
     assert len(after) == n + 1  # no double residency anywhere
     assert after[0][1][0] == 1.0  # the changed vector won
@@ -823,11 +824,76 @@ def test_ivf_store_upsert_atomic_single_commit_point(spark, tmp_path, monkeypatc
         "vec_id long, embedding array<double>",
     )
     sim.ivf_store_upsert(batch2, store, atomic=True)
-    assert sim._store_version(spark, store) == 2
+    assert st.store_version(spark, store) == 2
     assert not os.path.exists(store + "/v1")
     final = postings()
     assert len(final) == n + 1
     assert final[5000][1][1] == 1.0
+
+
+def test_ivf_store_refit_crash_at_meta_flip(spark, tmp_path, monkeypatch):
+    """The same injected crash at the META flip, through ivf_store_refit:
+    the live store stays the pre-refit one (version, postings, probe),
+    the half-built v1 is ignored, and a re-run commits the rebuild."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from arrowhouse_spark.operators import similarity as sim
+    from arrowhouse_spark.operators import store as st
+
+    n, dim = 60, 8
+    base = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda j: (
+                (F.pmod(F.xxhash64("id", j), F.lit(2001)) - F.lit(1000))
+                / F.lit(1000.0)
+            ).cast("double"),
+        ).alias("embedding"),
+    ).localCheckpoint()
+    store = str(tmp_path / "ivf")
+    sim.ivf_store_init(base, store, n_centroids=4)
+
+    def postings():
+        return {
+            r.vec_id: (r.centroid, tuple(r.embedding))
+            for r in sim._read_postings(spark, store).collect()
+        }
+
+    q = [1.0] + [0.0] * (dim - 1)
+
+    def probe():
+        return [
+            r.vec_id
+            for r in sim.ivf_store_topk(spark, store, q, k=10, nprobe=4).collect()
+        ]
+
+    before, probe_before = postings(), probe()
+
+    real_flip = st._write_meta_pointer
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash at META flip")
+
+    monkeypatch.setattr(st, "_write_meta_pointer", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sim.ivf_store_refit(spark, store, n_centroids=4, seed=5)
+    assert st.store_version(spark, store) == 0
+    assert postings() == before
+    assert probe() == probe_before
+    assert os.path.exists(store + "/v1")  # half-built staging, ignored
+
+    monkeypatch.setattr(st, "_write_meta_pointer", real_flip)
+    res = sim.ivf_store_refit(spark, store, n_centroids=4, seed=5)
+    assert (res["old_version"], res["new_version"]) == (0, 1)
+    assert st.store_version(spark, store) == 1
+    assert {k: v[1] for k, v in postings().items()} == {
+        k: v[1] for k, v in before.items()
+    }
+    assert not os.path.exists(store + "/postings")  # old layout removed
+    assert not os.path.exists(store + "/centroids")
 
 
 def test_ivf_store_refit_distributed_fit_above_threshold(spark, tmp_path):
@@ -840,6 +906,7 @@ def test_ivf_store_refit_distributed_fit_above_threshold(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from arrowhouse_spark.operators import similarity as sim
+    from arrowhouse_spark.operators import store as st
 
     dim = 8
 
@@ -869,7 +936,7 @@ def test_ivf_store_refit_distributed_fit_above_threshold(spark, tmp_path):
     build(st_d)
     res_d = sim.ivf_store_refit(spark, st_d, n_centroids=2, sample_cap=100)
     assert res_d["rows"] == 80
-    assert sim._store_version(spark, st_d) == 1
+    assert st.store_version(spark, st_d) == 1
     assert 1 <= res_d["n_centroids"] <= 2
     # every posting survived the rebuild
     assert sim._read_postings(spark, st_d).count() == 80

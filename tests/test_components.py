@@ -352,6 +352,52 @@ def test_components_store_retract_twin_consistent(spark, tmp_path):
     assert prim2 == {(2, 2), (3, 2), (11, 2), (12, 2)}
 
 
+def test_components_crashed_twin_is_rebuilt(spark, tmp_path):
+    """A crashed first twin write leaves a ``__bycomp`` directory holding
+    only ``_temporary``. It counts as absent: the next comp_index fold
+    full-scans and rebuilds the twin, and a retract meanwhile uses the
+    primary store."""
+    import os
+    import shutil
+
+    from arrowhouse_spark.operators.components import (
+        components_incremental,
+        components_store_retract,
+        connected_components,
+    )
+
+    store = str(tmp_path / "cc_store")
+    twin = store + "__bycomp"
+    ET = "src long, dst long"
+    days = [[(1, 2), (10, 11), (30, 31)], [(2, 10), (40, 41)]]
+
+    def crash_twin():
+        shutil.rmtree(twin)
+        os.makedirs(twin + "/_temporary/0")
+
+    def labels(path):
+        return {
+            (r.id, r.component)
+            for r in spark.read.parquet(path).select("id", "component").collect()
+        }
+
+    components_incremental(spark.createDataFrame(days[0], ET), store, comp_index=True)
+    crash_twin()
+    components_incremental(spark.createDataFrame(days[1], ET), store, comp_index=True)
+    full = {
+        (r.id, r.component)
+        for r in connected_components(
+            spark.createDataFrame([e for d in days for e in d], ET)
+        ).collect()
+    }
+    assert labels(store) == labels(twin) == full
+
+    crash_twin()
+    delta = components_store_retract(spark, store, [1])
+    assert {r.id: r.component for r in delta.collect()} == {2: 2, 10: 2, 11: 2}
+    assert labels(store) == {(2, 2), (10, 2), (11, 2), (30, 30), (31, 30), (40, 40), (41, 40)}
+
+
 def test_compact_components_store_bitexact_fewer_files(spark, tmp_path):
     """N folds accumulate small files; compaction coalesces to one file
     per bucket with the labeling BIT-IDENTICAL (twin included)."""

@@ -137,6 +137,17 @@ def test_source_mixed_sample_deterministic_and_mix(spark):
     # deterministic under repartitioning
     out2 = source_mixed_sample(df.repartition(7), {"a": 3, "b": 1}, key="doc_id")
     assert sorted((r.source, r.doc_id) for r in out2.collect()) == got1
+    # the same keys in two sources: n = {a:10, b:10}; weights 2/1 → m = 5
+    # → take a:10, b:5 — a key winning in a must not carry its b copy
+    both = spark.createDataFrame(
+        [(i, s) for s in ("a", "b") for i in range(10)],
+        "doc_id: long, source: string",
+    )
+    got3 = [
+        r.source
+        for r in source_mixed_sample(both, {"a": 2, "b": 1}, key="doc_id").collect()
+    ]
+    assert (got3.count("a"), got3.count("b")) == (10, 5)
 
 
 def test_source_mixing_rejects_bad_weights(spark):
