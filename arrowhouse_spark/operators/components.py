@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from arrowhouse_spark.operators.idgate import gate_broadcast
 from arrowhouse_spark.operators.store import (
     compact_partitions,
-    exists,
     normalize_ids,
     read_small,
     read_store,
@@ -271,7 +270,6 @@ def components_incremental(
     src: str = "src",
     dst: str = "dst",
     n_buckets: int = 16,
-    comp_index: bool = False,
 ) -> DataFrame:
     """Incremental connected components over a persistent label store —
     the missing incremental twin of the dedup stack: minhash_incremental
@@ -289,13 +287,8 @@ def components_incremental(
     Per fold (all joins keyed; nothing global):
       1. affected components = labels of the batch's vertices (broadcast
          semi-join of the batch vertex set against the store);
-      2. affected members = store rows of those components — with
-         ``comp_index=False`` this is the one full-store MAP-SIDE scan
-         per fold (a broadcast semi-join); with ``comp_index=True`` a
-         component-bucketed TWIN of the labels is maintained next to the
-         store (``<store>__bycomp``, partitioned by ccb =
-         hash_bucket(component)) and the lookup reads ONLY the affected
-         components' ccb partitions — no full scan anywhere in the fold;
+      2. affected members = store rows of those components — the one
+         full-store MAP-SIDE scan per fold (a broadcast semi-join);
       3. large-star/small-star CC over (member stars ∪ new edges) — the
          sub-graph is affected-components-sized, and stars are depth 1,
          so rounds stay O(log² longest NEW chain);
@@ -316,28 +309,15 @@ def components_incremental(
     from arrowhouse_spark.operators.sampling import hash_bucket
 
     spark = new_edges.sparkSession
-    twin_path = store_path + "__bycomp"
     e = (
         new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
     store = read_store(spark, store_path)
-    has_meta, twin = False, None
+    has_meta = False
     if store is not None:
         n_buckets, has_meta = _resolve_n_buckets(spark, store_path, n_buckets)
-        if comp_index:
-            # an unreadable twin (a crashed first twin write) is absent:
-            # this fold full-scans and the write below rebuilds it
-            twin = read_store(spark, twin_path)
-        elif exists(spark, twin_path):
-            # a twin left behind by comp_index=True folds would go
-            # silently STALE here and corrupt a later comp_index=True fold
-            raise ValueError(
-                f"store {store_path!r} has a component index twin; "
-                "keep passing comp_index=True for its whole lifecycle "
-                "(or delete the twin directory to drop the index)"
-            )
 
     verts = (
         e.select(F.col("src").alias("id"))
@@ -363,21 +343,8 @@ def components_incremental(
             .distinct()
             .localCheckpoint()
         )
-        members_src = store
-        if twin is not None:
-            cbuckets = [
-                r.ccb
-                for r in acomps.select(
-                    hash_bucket(
-                        "component", n_buckets, salt="ccb"
-                    ).alias("ccb")
-                )
-                .distinct()
-                .collect()
-            ]
-            members_src = twin.filter(F.col("ccb").isin(cbuckets))
         members = (
-            members_src.join(F.broadcast(acomps), "component", "semi")
+            store.join(F.broadcast(acomps), "component", "semi")
             .select("id", "component")
             .localCheckpoint()
         )
@@ -430,42 +397,6 @@ def components_incremental(
             store_path + "__meta",
             json.dumps({"n_buckets": n_buckets}).encode(),
         )
-    if comp_index:
-        ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
-        if twin is not None:
-            # touched ccb partitions = new positions of the delta rows ∪
-            # OLD positions of every affected component (rows that merged
-            # away must leave their old bucket when it is rewritten)
-            tvals = [
-                r.ccb
-                for r in delta.select(ccb)
-                .unionByName(acomps.select(ccb))
-                .distinct()
-                .collect()
-            ]
-            tcarry = (
-                twin.filter(F.col("ccb").isin(tvals))
-                .join(delta.select("id"), "id", "left_anti")
-                .select("id", "component", "ccb")
-            )
-            rewrite_partitions(
-                spark,
-                twin_path,
-                delta.select("id", "component", ccb).unionByName(tcarry),
-                "ccb",
-                tvals,
-            )
-        else:
-            # first fold, or adopting a twin-less store: build the twin
-            # from the full labeling just committed
-            (
-                spark.read.parquet(store_path)
-                .select("id", "component", ccb)
-                .repartition("ccb")
-                .write.mode("overwrite")
-                .partitionBy("ccb")
-                .parquet(twin_path)
-            )
     return delta.select("id", "component")
 
 
@@ -503,13 +434,10 @@ def components_store_retract_counted(
     cluster identity persists); callers needing exact split semantics
     must re-run CC over the retained edge relation.
 
-    Per retract (all pruned, nothing global): locate = cb-bucket-pruned
-    semi-join of the id set; members of affected components come from the
-    ``__bycomp`` twin's ccb partitions when present (else one map-side
-    full scan, as in components_incremental; an unreadable twin counts
-    as absent); the rewrite touches ONLY buckets holding a removed or
-    relabeled row. The twin is kept consistent, including label moves
-    across ccb buckets.
+    Per retract: locate = cb-bucket-pruned semi-join of the id set;
+    members of affected components come from one map-side full scan, as
+    in components_incremental; the rewrite touches ONLY buckets holding
+    a removed or relabeled row.
     Returns (delta, removed): the RELABELED survivors (id, component) —
     empty when no retracted id was a component label — and the number of
     store rows removed (the stored-victim count, computed from the
@@ -532,11 +460,10 @@ def components_store_retract_counted(
         return empty, 0
     # count-gate every id-set hint in this op: batch-sized forgets
     # broadcast, retention-sweep-sized sets (≥ idgate.BROADCAST_ID_LIMIT)
-    # fall back to shuffle joins — the store side is cb/ccb-pruned at
-    # every site, so the shuffles stay delta-sized
+    # fall back to shuffle joins — the store side is cb-pruned or
+    # semi-joined against affected components, so they stay delta-sized
     ids_j = gate_broadcast(ids)
     n_buckets, _ = _resolve_n_buckets(spark, store_path, n_buckets)
-    twin_path = store_path + "__bycomp"
 
     vbuckets = [
         r.cb
@@ -556,21 +483,8 @@ def components_store_retract_counted(
         return empty, 0  # none of the ids are in the store
     acomps_j = gate_broadcast(acomps, n_rows=n_acomps)
 
-    twin = read_store(spark, twin_path)
-    if twin is not None:
-        cbuckets = [
-            r.ccb
-            for r in acomps.select(
-                hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
-            )
-            .distinct()
-            .collect()
-        ]
-        members_src = twin.filter(F.col("ccb").isin(cbuckets))
-    else:
-        members_src = store
     members = (
-        members_src.join(acomps_j, "component", "semi")
+        store.join(acomps_j, "component", "semi")
         .select("id", "component")
         .localCheckpoint()
     )
@@ -609,34 +523,10 @@ def components_store_retract_counted(
         "cb", hash_bucket("id", n_buckets, salt="cc")
     ).unionByName(carry)
     if rewrite_partitions(spark, store_path, rows, "cb", tvals):
-        # retract-ALL removed the store; its meta and twin go with it, so
-        # the next components_incremental is a clean first fold — the
+        # retract-ALL removed the store; its meta goes with it, so the
+        # next components_incremental is a clean first fold — the
         # correct forget-everything state
         remove(spark, store_path + "__meta")
-        remove(spark, twin_path)
-    elif twin is not None:
-        ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
-        # touched ccb = every affected component's OLD bucket ∪ the delta
-        # rows' NEW buckets (labels move buckets when the root retires)
-        tcvals = [
-            r.ccb
-            for r in acomps.select(ccb)
-            .unionByName(delta.select(ccb))
-            .distinct()
-            .collect()
-        ]
-        tcarry = (
-            twin.filter(F.col("ccb").isin(tcvals))
-            .join(touch_ids_j, "id", "left_anti")
-            .select("id", "component", "ccb")
-        )
-        rewrite_partitions(
-            spark,
-            twin_path,
-            delta.select("id", "component", ccb).unionByName(tcarry),
-            "ccb",
-            tcvals,
-        )
     return delta.select("id", "component"), n_removed
 
 
@@ -644,19 +534,11 @@ def compact_components_store(
     spark: SparkSession,
     store_path: str,
 ) -> dict:
-    """Compact the CC label store (and its ``__bycomp`` twin when
-    present): every components_incremental fold rewrites only touched
-    buckets, and a long-lived store accumulates small files whose
-    open/footer cost comes to dominate the per-fold pruned reads — the
-    compact_band_store problem on the label layout. Labels are carried
-    BIT-IDENTICAL (pinned in tests). Single-writer contract. Returns
-    {"rows", "files_before", "files_after"} (plus "twin_rows")."""
+    """Compact the CC label store: every components_incremental fold
+    rewrites only touched buckets, and a long-lived store accumulates
+    small files whose open/footer cost comes to dominate the per-fold
+    pruned reads — the compact_band_store problem on the label layout.
+    Labels are carried BIT-IDENTICAL (pinned in tests). Single-writer
+    contract. Returns {"rows", "files_before", "files_after"}."""
     rows, before, after = compact_partitions(spark, store_path, "cb")
-    res = {"rows": rows, "files_before": before, "files_after": after}
-    twin_path = store_path + "__bycomp"
-    if exists(spark, twin_path):
-        trows, tbefore, tafter = compact_partitions(spark, twin_path, "ccb")
-        res["twin_rows"] = trows
-        res["files_before"] += tbefore
-        res["files_after"] += tafter
-    return res
+    return {"rows": rows, "files_before": before, "files_after": after}

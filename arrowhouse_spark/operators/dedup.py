@@ -85,16 +85,9 @@ def _same_plan(a: DataFrame, b: DataFrame) -> bool:
         return a.schema == b.schema
 
 
-#: diagnostic — total registry evictions this process (a bench pass that
-#: evicts at all will rebuild "warm" shared relations on its next pass)
-EVICTIONS = 0
-
-
 def _evict_to_cap() -> None:
-    global EVICTIONS
     while len(_CACHE_REGISTRY) >= _CACHE_REGISTRY_MAX:
         oldest_key = next(iter(_CACHE_REGISTRY))
-        EVICTIONS += 1
         for old in _CACHE_REGISTRY.pop(oldest_key):
             try:
                 old.unpersist()

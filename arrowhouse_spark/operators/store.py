@@ -1,12 +1,12 @@
 """The on-disk protocol shared by every persistent store in the engine.
 
 The stores: IVF postings (operators/similarity.py), the components label
-store and its ``__bycomp`` twin (operators/components.py), the LSH/dHash
-band, fingerprint and SCD2 stores (streaming/replace.py, operators/dedup.py)
-and the training-shard export (sources/shards.py). All of them go through
-the Hadoop FileSystem API, never ``os.path``: a local-path check sees
-nothing on HDFS/S3A, so a guard written that way would silently never fire
-exactly where it matters.
+store (operators/components.py), the LSH/dHash band, fingerprint and SCD2
+stores (streaming/replace.py, operators/dedup.py) and the training-shard
+export (sources/shards.py). All of them go through the Hadoop FileSystem
+API, never ``os``/``shutil``/``glob``: a local-path check sees nothing on
+HDFS/S3A, so a guard written that way would silently never fire exactly
+where it matters.
 
 Layout. A store is a parquet directory partitioned by one column
 (``part_col=value/`` directories). A store that is rebuilt whole (the IVF
@@ -19,7 +19,10 @@ Missing means empty. A path that does not exist, or that holds no data
 file a schema can be inferred from (a crashed first write leaves only
 ``_temporary``), reads as an empty store: :func:`read_store` returns None.
 Any other read failure (corrupt footer, permissions) raises, so a broken
-history is never taken for an empty one.
+history is never taken for an empty one. A streaming store is the
+exception (:func:`refuse_missing_history`): once a micro-batch has
+committed, a missing store means it was moved or deleted under the
+stream, and probing it as empty would silently re-admit every duplicate.
 
 Touched-partition rewrite (:func:`rewrite_partitions`). A mutation
 rewrites only the partitions it touches, by dynamic partition overwrite,
@@ -143,6 +146,39 @@ def is_missing_store_error(exc: Exception) -> bool:
     )
 
 
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Move ``src`` to ``dst``, which must not exist."""
+    fs, s = hadoop_fs(spark, src)
+    if not fs.rename(s, hadoop_fs(spark, dst)[1]):
+        raise OSError(f"rename {src!r} -> {dst!r} failed")
+
+
+def _glob_count(spark: SparkSession, pattern: str) -> int:
+    fs, p = hadoop_fs(spark, pattern)
+    hits = fs.globStatus(p)
+    return 0 if hits is None else len(hits)
+
+
+def is_partitioned(spark: SparkSession, path: str, part_col: str) -> bool:
+    """Whether the store at ``path`` holds ``part_col=`` partition
+    directories: its layout, known without reading a footer."""
+    return _glob_count(spark, f"{path}/{part_col}=*") > 0
+
+
+def refuse_missing_history(store_path: str, batch_id: int) -> None:
+    """A streaming store that is missing reads as empty only at batch 0.
+    Every batch commits its store write (batch 0 always creates the
+    directory, even with no rows), so at ``batch_id > 0`` a missing store
+    was moved or deleted under the stream: raise, and let the retried
+    batch see the store, instead of rebuilding from empty history."""
+    if batch_id > 0:
+        raise RuntimeError(
+            f"store {store_path!r} is missing but batch_id={batch_id} "
+            "implies committed history — refusing to read it as empty "
+            "(was it compacted or retracted while the stream was live?)"
+        )
+
+
 def read_store(spark: SparkSession, path: str) -> DataFrame | None:
     """The parquet store at ``path``, or None when it is missing or holds
     no readable data file. The existence check comes first so a missing
@@ -218,12 +254,14 @@ def rewrite_partitions(
     return False
 
 
-def _data_files(spark: SparkSession, path: str, part_col: str) -> int:
-    """Data files under the store's partition directories (hidden and
-    ``_``-prefixed names, which readers skip, excluded)."""
-    fs, files = hadoop_fs(spark, f"{path}/{part_col}=*/[^._]*")
-    hits = fs.globStatus(files)
-    return 0 if hits is None else len(hits)
+def data_files(
+    spark: SparkSession, path: str, part_col: str | None = None
+) -> int:
+    """Data files under the store's ``part_col=`` partition directories,
+    or at its root when ``part_col`` is None (hidden and ``_``-prefixed
+    names, which readers skip, excluded)."""
+    sub = f"{part_col}=*/" if part_col else ""
+    return _glob_count(spark, f"{path}/{sub}[^._]*")
 
 
 def compact_partitions(
@@ -236,10 +274,10 @@ def compact_partitions(
     df = read_store(spark, path)
     if df is None:
         return 0, 0, 0
-    files_before = _data_files(spark, path, part_col)
+    files_before = data_files(spark, path, part_col)
     rows = df.count()
     rewrite_partitions(spark, path, df, part_col, touched=())
-    return rows, files_before, _data_files(spark, path, part_col)
+    return rows, files_before, data_files(spark, path, part_col)
 
 
 def partitioned_store_retract(
@@ -356,20 +394,14 @@ def _write_meta_pointer(
     only as an explicit Java ARRAY of the component type — passing the
     bare enum raises a method-not-found Py4JError that would silently
     route every flip to the non-atomic fallback."""
+    tmp_path, meta_path = store_path + "/META.tmp", store_path + "/META"
     payload = json.dumps({"version": int(version)}).encode("utf-8")
-    fs, tmp = hadoop_fs(spark, store_path + "/META.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
-    _fs2, meta = hadoop_fs(spark, store_path + "/META")
+    write_small(spark, tmp_path, payload)
+    tmp, meta = hadoop_fs(spark, tmp_path)[1], hadoop_fs(spark, meta_path)[1]
 
     def _fallback_rename() -> None:
-        if fs.exists(meta):
-            fs.delete(meta, False)
-        if not fs.rename(tmp, meta):
-            raise OSError(f"META pointer rename failed for {store_path!r}")
+        remove(spark, meta_path)
+        rename(spark, tmp_path, meta_path)
 
     try:
         jvm = spark.sparkContext._jvm

@@ -424,6 +424,7 @@ def _minhash_process_batch(
     from pyspark.sql.types import StructType
 
     from arrowhouse_spark.operators.dedup import minhash_incremental
+    from arrowhouse_spark.operators.store import exists, refuse_missing_history
 
     store_schema = (
         StructType()
@@ -434,24 +435,12 @@ def _minhash_process_batch(
         .add("batch_id", T.LongType())
     )
     spark = batch_df.sparkSession
-    try:
+    if exists(spark, store_path):
         store = spark.read.schema(store_schema).parquet(store_path)
-        store.head(1)  # surface a missing dir as the except path
-    except Exception:  # noqa: BLE001 — first batch: no store yet
-        if batch_id > 0:
-            # Prior batches committed (ids are monotonic; batch 0 always
-            # creates the store dir, even with zero survivors), so a
-            # missing store means it was moved/deleted out from under the
-            # stream — e.g. reading inside compact_band_store's swap
-            # window. Probing an EMPTY history here would silently
-            # re-admit every near-duplicate in this batch; fail loudly
-            # instead and let the retry see the swapped-in store.
-            raise RuntimeError(
-                f"minhash band store {store_path!r} is missing but "
-                f"batch_id={batch_id} implies committed history — refusing "
-                "to probe an empty index (was compact_band_store run "
-                "while the stream was live?)"
-            )
+    else:
+        # e.g. read inside compact_band_store's swap window: probing an
+        # empty history would re-admit every near-duplicate in the batch
+        refuse_missing_history(store_path, batch_id)
         store = spark.createDataFrame([], store_schema)
     # legacy stores (written before the batch_id-partitioned layout) surface
     # batch_id = NULL under the explicit schema; treat them as committed
@@ -507,90 +496,80 @@ def compact_band_store(
     minhash_incremental appends grow (round-6 verdict #4): every batch
     adds its own small parquet file-set, so a years-of-history store
     becomes thousands of tiny files whose open/footer cost dominates the
-    probe. This helper rewrites the store as ``n_files`` files CLUSTERED
-    by (band, bucket) — the probe's join key — so each file holds
-    contiguous bucket runs and min/max column statistics let the scan
-    skip files for buckets the daily batch never touches.
+    probe. This helper rewrites the store as about ``n_files`` files
+    RANGE-partitioned by (batch_id, band, bucket) — the probe's join key
+    after the partition column — so each file holds one contiguous
+    bucket run and min/max column statistics let the scan skip files for
+    buckets the daily batch never touches.
 
     Layout contract: every batch strictly OLDER than the newest one
     present is folded into the reserved history partition
     ``batch_id = -1`` (repeated compactions are idempotent — history
-    stays at -1); the NEWEST batch's partition is carried over
-    byte-identical, never merged or rewritten. That makes compaction safe
-    against the
+    stays at -1); the NEWEST batch is kept as its own partition, never
+    merged into history. That makes compaction safe against the
     at-least-once replay window this module documents: if the newest
     batch J committed its store write but not its checkpoint, the
     replayed J still probes the full folded history (-1 < J), and its
     dynamic partition overwrite still replaces ONLY partition J — not the
     collapsed store. Rows with batch_id = NULL (a legacy unpartitioned
     store) fold into -1 too, which is also the migration path to the
-    partitioned layout. Stores with no batch_id column at all (the plain
+    partitioned layout. Stores with no batch_id partitions (the plain
     incremental path) are rewritten unpartitioned.
 
     **Run only with the stream STOPPED** (between availableNow triggers
     or after query.stop()): the swap is two renames, not one atomic
     operation, so a concurrent micro-batch can observe the store ABSENT
     between them. A reader in that window must not probe empty history —
-    _minhash_process_batch now raises (rather than falling back to an
-    empty index) when the store is missing but batch_id indicates
-    committed batches, so the failure is loud and the retried batch sees
-    the swapped-in store. An object-store deployment would write a new
-    snapshot prefix and flip a pointer instead, which removes the window
-    entirely. Returns {"rows": n, "files_before": a,
+    _minhash_process_batch raises (operators/store.py:
+    refuse_missing_history) when the store is missing but batch_id
+    indicates committed batches, so the failure is loud and the retried
+    batch sees the swapped-in store. An object-store deployment would
+    write a new snapshot prefix and flip a pointer instead, which removes
+    the window entirely. Returns {"rows": n, "files_before": a,
     "files_after": b}."""
-    import glob
-    import os
-    import shutil
-
-    df = spark.read.parquet(store_path)
-    files_before = len(
-        glob.glob(os.path.join(store_path, "**", "*.parquet"), recursive=True)
+    from arrowhouse_spark.operators.store import (
+        data_files,
+        is_partitioned,
+        remove,
+        rename,
     )
-    has_batch = "batch_id" in df.columns
+
+    part_col = (
+        "batch_id" if is_partitioned(spark, store_path, "batch_id") else None
+    )
+    df = spark.read.parquet(store_path)
+    files_before = data_files(spark, store_path, part_col)
     tmp = store_path.rstrip("/") + ".compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer_cols = ["band", "bucket"]
-    keep_dir = None
-    if has_batch:
+    remove(spark, tmp)
+    out, sort_cols = df, ["band", "bucket"]
+    if part_col is not None:
+        b = F.coalesce(F.col("batch_id"), F.lit(-1).cast("long"))
+        max_b = df.agg(F.max(b)).collect()[0][0]
         out = df.withColumn(
-            "batch_id", F.coalesce(F.col("batch_id"), F.lit(-1).cast("long"))
+            "batch_id",
+            F.when(b == F.lit(max_b), b).otherwise(F.lit(-1).cast("long")),
         )
-        max_b = out.agg(F.max("batch_id")).collect()[0][0]
-        # fold history only, into the reserved -1 partition; the newest
-        # batch's partition directory is carried over BYTE-IDENTICAL so an
-        # at-least-once replay of it stays correct (see docstring)
-        out = out.filter(F.col("batch_id") != F.lit(max_b)).withColumn(
-            "batch_id", F.lit(-1).cast("long")
-        )
-        if max_b is not None and max_b >= 0:
-            keep_dir = f"batch_id={max_b}"
-    else:
-        out = df
+        # ranges led by the partition column: at most one range spans
+        # both partitions, so the store keeps about n_files files
+        sort_cols = [part_col, *sort_cols]
     w = (
-        out.repartition(n_files, *writer_cols)
-        .sortWithinPartitions(*writer_cols)
+        out.repartitionByRange(n_files, *sort_cols)
+        .sortWithinPartitions(*sort_cols)
         .write.mode("overwrite")
     )
-    if has_batch:
-        w = w.partitionBy("batch_id")
+    if part_col is not None:
+        w = w.partitionBy(part_col)
     w.parquet(tmp)
-    if keep_dir is not None:
-        src = os.path.join(store_path, keep_dir)
-        if os.path.isdir(src):
-            shutil.copytree(src, os.path.join(tmp, keep_dir))
     rows = df.count()
     old = store_path.rstrip("/") + ".compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old, ignore_errors=True)
-    files_after = len(
-        glob.glob(os.path.join(store_path, "**", "*.parquet"), recursive=True)
-    )
+    remove(spark, old)
+    rename(spark, store_path, old)
+    rename(spark, tmp, store_path)
+    remove(spark, old)
     return {
         "rows": rows,
         "files_before": files_before,
-        "files_after": files_after,
+        "files_after": data_files(spark, store_path, part_col),
     }
 
 
@@ -776,17 +755,14 @@ def _scd2_process_batch(
     events = batch_df.select(*keys, ts_col, attr_col, tie_col).withColumn(
         "kb", hash_bucket(keys[0], n_buckets, salt="scd2")
     )
-    from arrowhouse_spark.operators.store import read_store
+    from arrowhouse_spark.operators.store import (
+        read_store,
+        refuse_missing_history,
+    )
 
     store = read_store(spark, store_path)
     if store is None:
-        if batch_id > 0:
-            raise RuntimeError(
-                f"scd2 store {store_path!r} is missing but batch_id="
-                f"{batch_id} implies committed history — refusing to "
-                "rebuild from nothing (same contract as the minhash "
-                "band store)"
-            )
+        refuse_missing_history(store_path, batch_id)
     akeys = events.select(*keys, "kb").distinct()
     if store is not None:
         prior = store.join(F.broadcast(akeys.select(*keys)), keys, "semi")
@@ -1338,19 +1314,20 @@ def band_store_retract(
     run with the stream stopped, as for compact_band_store."""
     from arrowhouse_spark.operators.idgate import gate_broadcast
     from arrowhouse_spark.operators.store import (
+        is_partitioned,
         normalize_ids,
         partitioned_store_retract,
         read_store,
         remove,
     )
 
-    store = read_store(spark, store_path)
-    if store is None:
-        return 0
-    if "batch_id" in store.columns:
+    if is_partitioned(spark, store_path, "batch_id"):
         return partitioned_store_retract(
             spark, store_path, ids, id_col, "batch_id"
         )
+    store = read_store(spark, store_path)
+    if store is None:
+        return 0
     # legacy unpartitioned layout: no pruning axis — rewrite whole
     ids_j = gate_broadcast(normalize_ids(spark, ids, id_col))
     hitn = store.join(ids_j, id_col, "semi").count()

@@ -169,6 +169,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _sum_sq_sql(x: str) -> str:
+    """Oracle SQL for an audio query's ``sum_sq``: Σx² as BIGINT,
+    saturated at INT64_MAX exactly as operators/multimodal.py's
+    AUDIO_SCHEMA emits it, where a bare cast of the sum would overflow."""
+    return f"CAST(least(sum({x} * {x}), 9223372036854775807) AS BIGINT)"
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events relation with ``ts`` normalized to a µs TIMESTAMP whatever
     the fixture's physical type: older fixtures stored TIMESTAMP(NANOS)

@@ -54,6 +54,7 @@ from arrowhouse_spark.suite import (
     _doc_text_tokens,
     _parquet_num_rows,
     _rel_cached,
+    _sum_sq_sql,
     _t,
     register,
 )
@@ -1586,7 +1587,7 @@ def image_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              800 + (doc_id % 5) * 100 AS n,
@@ -1602,7 +1603,7 @@ def image_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(sr AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(sum(s * s) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("s")} AS sum_sq,
            CAST(max(abs(s)) AS BIGINT) AS peak
     FROM smp GROUP BY media_id, n, sr
     """,

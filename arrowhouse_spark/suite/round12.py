@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from arrowhouse_spark.session import shuffle_parts
 from arrowhouse_spark.suite import (
     _events,
+    _sum_sq_sql,
     _t,
     register,
 )
@@ -314,7 +315,7 @@ def png_palette_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_stereo_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              600 + (doc_id % 4) * 100 AS n,
@@ -335,7 +336,7 @@ def png_palette_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(sr AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(sum(s * s) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("s")} AS sum_sq,
            CAST(max(abs(s)) AS BIGINT) AS peak
     FROM mono GROUP BY media_id, n, sr
     """,

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.session import shuffle_parts
-from arrowhouse_spark.suite import _t, register
+from arrowhouse_spark.suite import _sum_sq_sql, _t, register
 
 # --------------------------------------------------------------------------
 # SipHash128 parity — closes the verdict's "only the 64-bit digest is
@@ -108,7 +108,7 @@ def sip_hash128_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_pcm24_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              600 + (doc_id % 4) * 100 AS n,
@@ -126,7 +126,7 @@ def sip_hash128_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(sr AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(sum(s * s) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("s")} AS sum_sq,
            CAST(max(abs(s)) AS BIGINT) AS peak
     FROM smp GROUP BY media_id, n, sr
     """,
@@ -501,7 +501,7 @@ def video_mjpeg_color_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "wav_g711_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              500 + (doc_id % 4) * 80 AS n,
@@ -537,7 +537,7 @@ def video_mjpeg_color_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame
     SELECT media_id, CAST(8000 AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-           CAST(sum(sv * sv) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("sv")} AS sum_sq,
            CAST(max(abs(sv)) AS BIGINT) AS peak
     FROM s GROUP BY media_id, n
     """,
@@ -602,7 +602,7 @@ def wav_g711_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_float_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              300 + (doc_id % 5) * 40 AS n,
@@ -622,7 +622,7 @@ def wav_g711_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(sr AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // sr AS BIGINT) AS duration_ms,
-           CAST(sum(s * s) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("s")} AS sum_sq,
            CAST(max(abs(s)) AS BIGINT) AS peak
     FROM fr GROUP BY media_id, n, sr
     """,
@@ -681,7 +681,7 @@ def wav_float_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_adpcm_decode_real",
-    """
+    f"""
     WITH RECURSIVE m AS (
       SELECT doc_id AS media_id,
              60 + (doc_id % 4) * 17 AS n,
@@ -729,7 +729,7 @@ def wav_float_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(8000 AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-           CAST(sum(sv * sv) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("sv")} AS sum_sq,
            CAST(max(abs(sv)) AS BIGINT) AS peak
     FROM s GROUP BY media_id, n
     """,
@@ -790,7 +790,7 @@ def wav_adpcm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "wav_ms_adpcm_decode_real",
-    """
+    f"""
     WITH RECURSIVE m AS (
       SELECT doc_id AS media_id,
              67 + (doc_id % 4) * 20 AS n,
@@ -842,7 +842,7 @@ def wav_adpcm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(8000 AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-           CAST(sum(sv * sv) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("sv")} AS sum_sq,
            CAST(max(abs(sv)) AS BIGINT) AS peak
     FROM s GROUP BY media_id, n
     """,
@@ -903,7 +903,7 @@ def wav_ms_adpcm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "avi_audio_decode_real",
-    """
+    f"""
     WITH m AS (
       SELECT doc_id AS media_id,
              400 + (doc_id % 4) * 60 AS n,
@@ -932,7 +932,7 @@ def wav_ms_adpcm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, CAST(8000 AS INTEGER) AS sample_rate,
            CAST(n AS BIGINT) AS n_samples,
            CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
-           CAST(sum(sv * sv) AS BIGINT) AS sum_sq,
+           {_sum_sq_sql("sv")} AS sum_sq,
            CAST(max(abs(sv)) AS BIGINT) AS peak
     FROM s GROUP BY media_id, n
     """,

@@ -177,57 +177,6 @@ def test_components_incremental_matches_full_recompute(spark, tmp_path):
     assert survivors, "dynamic overwrite rewrote every bucket"
 
 
-def test_components_incremental_comp_index_parity_and_pruning(spark, tmp_path):
-    """comp_index=True maintains a component-bucketed twin next to the
-    store: folds give the SAME labeling as comp_index=False and as one
-    batch CC; the twin stays row-identical to the primary after every
-    fold (incl. a cross-day merge that moves rows between comp buckets);
-    and toggling comp_index off against a twinned store refuses loudly."""
-    import pytest
-
-    from arrowhouse_spark.operators.components import (
-        components_incremental,
-        connected_components,
-    )
-
-    store = str(tmp_path / "ccx")
-    ET = "src long, dst long"
-    days = [
-        [(1, 2), (2, 3), (10, 11), (30, 31)],
-        [(3, 10), (20, 21)],
-        [(31, 32), (21, 1)],  # merges 20s into comp 1; extends 30s
-    ]
-    for rows in days:
-        components_incremental(
-            spark.createDataFrame(rows, ET), store, comp_index=True
-        )
-        primary = {
-            (r.id, r.component)
-            for r in spark.read.parquet(store).select("id", "component").collect()
-        }
-        twin = {
-            (r.id, r.component)
-            for r in spark.read.parquet(store + "__bycomp")
-            .select("id", "component")
-            .collect()
-        }
-        assert primary == twin  # invariant after EVERY fold
-
-    full = {
-        (r.id, r.component)
-        for r in connected_components(
-            spark.createDataFrame([e for d in days for e in d], ET)
-        ).collect()
-    }
-    assert primary == full
-    assert dict(full)[21] == 1  # the cross-day merge moved comp buckets
-
-    with pytest.raises(ValueError, match="component index twin"):
-        components_incremental(
-            spark.createDataFrame([(40, 41)], ET), store, comp_index=False
-        )
-
-
 def test_components_incremental_n_buckets_pinned(spark, tmp_path):
     """A fold with a different n_buckets than the store was built with
     would prune the wrong partitions and silently mislabel — the meta
@@ -310,97 +259,9 @@ def test_components_store_retract_relabels_and_prunes(spark, tmp_path):
     assert labels() == {1: 1, 3: 1, 11: 1, 12: 1}
 
 
-def test_components_store_retract_twin_consistent(spark, tmp_path):
-    """Retract against a comp_index store keeps the __bycomp twin
-    row-identical to the primary — including the ccb bucket MOVE when a
-    root retires and its component relabels."""
-    from arrowhouse_spark.operators.components import (
-        components_incremental,
-        components_store_retract,
-    )
-
-    store = str(tmp_path / "cc_store")
-    ET = "src long, dst long"
-    components_incremental(
-        spark.createDataFrame([(1, 2), (2, 3), (10, 11), (11, 12)], ET),
-        store,
-        comp_index=True,
-    )
-    delta = components_store_retract(spark, store, [1, 10])
-    assert {r.id: r.component for r in delta.collect()} == {
-        2: 2, 3: 2, 11: 11, 12: 11,
-    }
-    prim = {
-        (r.id, r.component)
-        for r in spark.read.parquet(store).select("id", "component").collect()
-    }
-    twin = {
-        (r.id, r.component)
-        for r in spark.read.parquet(store + "__bycomp")
-        .select("id", "component")
-        .collect()
-    }
-    assert prim == twin == {(2, 2), (3, 2), (11, 11), (12, 11)}
-    # twin still prunes correctly: a comp_index fold after retract works
-    components_incremental(
-        spark.createDataFrame([(3, 12)], ET), store, comp_index=True
-    )
-    prim2 = {
-        (r.id, r.component)
-        for r in spark.read.parquet(store).select("id", "component").collect()
-    }
-    assert prim2 == {(2, 2), (3, 2), (11, 2), (12, 2)}
-
-
-def test_components_crashed_twin_is_rebuilt(spark, tmp_path):
-    """A crashed first twin write leaves a ``__bycomp`` directory holding
-    only ``_temporary``. It counts as absent: the next comp_index fold
-    full-scans and rebuilds the twin, and a retract meanwhile uses the
-    primary store."""
-    import os
-    import shutil
-
-    from arrowhouse_spark.operators.components import (
-        components_incremental,
-        components_store_retract,
-        connected_components,
-    )
-
-    store = str(tmp_path / "cc_store")
-    twin = store + "__bycomp"
-    ET = "src long, dst long"
-    days = [[(1, 2), (10, 11), (30, 31)], [(2, 10), (40, 41)]]
-
-    def crash_twin():
-        shutil.rmtree(twin)
-        os.makedirs(twin + "/_temporary/0")
-
-    def labels(path):
-        return {
-            (r.id, r.component)
-            for r in spark.read.parquet(path).select("id", "component").collect()
-        }
-
-    components_incremental(spark.createDataFrame(days[0], ET), store, comp_index=True)
-    crash_twin()
-    components_incremental(spark.createDataFrame(days[1], ET), store, comp_index=True)
-    full = {
-        (r.id, r.component)
-        for r in connected_components(
-            spark.createDataFrame([e for d in days for e in d], ET)
-        ).collect()
-    }
-    assert labels(store) == labels(twin) == full
-
-    crash_twin()
-    delta = components_store_retract(spark, store, [1])
-    assert {r.id: r.component for r in delta.collect()} == {2: 2, 10: 2, 11: 2}
-    assert labels(store) == {(2, 2), (10, 2), (11, 2), (30, 30), (31, 30), (40, 40), (41, 40)}
-
-
 def test_compact_components_store_bitexact_fewer_files(spark, tmp_path):
     """N folds accumulate small files; compaction coalesces to one file
-    per bucket with the labeling BIT-IDENTICAL (twin included)."""
+    per bucket with the labeling BIT-IDENTICAL."""
     from arrowhouse_spark.operators.components import (
         compact_components_store,
         components_incremental,
@@ -415,22 +276,19 @@ def test_compact_components_store_bitexact_fewer_files(spark, tmp_path):
         [(100, 101)],
     ]
     for rows in days:
-        components_incremental(
-            spark.createDataFrame(rows, ET), store, comp_index=True
-        )
+        components_incremental(spark.createDataFrame(rows, ET), store)
 
     # fragment the layout the way an AQE rebalance split or a foreign
     # writer would: round-robin repartition before a full dynamic
     # overwrite puts several files in every bucket directory
-    for path, pcol in ((store, "cb"), (store + "__bycomp", "ccb")):
-        frag = spark.read.parquet(path).localCheckpoint()
-        (
-            frag.repartition(6)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
+    frag = spark.read.parquet(store).localCheckpoint()
+    (
+        frag.repartition(6)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cb")
+        .parquet(store)
+    )
 
     def snap(path):
         return {
@@ -438,23 +296,20 @@ def test_compact_components_store_bitexact_fewer_files(spark, tmp_path):
             for r in spark.read.parquet(path).select("id", "component").collect()
         }
 
-    before, tbefore = snap(store), snap(store + "__bycomp")
+    before = snap(store)
     res = compact_components_store(spark, store)
     assert snap(store) == before
-    assert snap(store + "__bycomp") == tbefore
     assert res["files_after"] < res["files_before"]
-    assert res["rows"] == len(before) and res["twin_rows"] == len(tbefore)
+    assert res["rows"] == len(before)
     # compacted store still folds correctly
-    components_incremental(
-        spark.createDataFrame([(101, 1)], ET), store, comp_index=True
-    )
+    components_incremental(spark.createDataFrame([(101, 1)], ET), store)
     after = snap(store)
     assert (101, 0) in after and (100, 0) in after and (1, 0) in after
 
 
 def test_components_store_retract_all_resets_to_first_fold(spark, tmp_path):
     """Review fix, pinned: retracting EVERY id removes the store (plus
-    meta and twin) instead of leaving an unreadable bucket-less
+    meta) instead of leaving an unreadable bucket-less
     directory — the next fold is a clean first fold."""
     import os
 
@@ -465,14 +320,11 @@ def test_components_store_retract_all_resets_to_first_fold(spark, tmp_path):
 
     store = str(tmp_path / "cc_store")
     ET = "src long, dst long"
-    components_incremental(
-        spark.createDataFrame([(1, 2), (10, 11)], ET), store, comp_index=True
-    )
+    components_incremental(spark.createDataFrame([(1, 2), (10, 11)], ET), store)
     delta = components_store_retract(spark, store, [1, 2, 10, 11])
     assert delta.count() == 0
     assert not os.path.exists(store)
     assert not os.path.exists(store + "__meta")
-    assert not os.path.exists(store + "__bycomp")
     # clean first fold afterwards
     components_incremental(spark.createDataFrame([(5, 6)], ET), store)
     labels = {

@@ -743,6 +743,68 @@ def test_compact_band_store_probe_invariant(spark, tmp_path):
     )
 
 
+def test_compact_band_store_on_file_uri_matches_plain_path(spark, tmp_path):
+    """compact_band_store reaches the store through the Hadoop FS API, so
+    a ``file://`` store path compacts exactly like a plain one: same row
+    multiset, same probe verdict, fewer files, and the newest batch stays
+    its own partition. Compacting again after that partition is retracted
+    (every row then at -1) keeps the whole history."""
+    from arrowhouse_spark.operators.dedup import minhash_incremental
+    from arrowhouse_spark.streaming.replace import (
+        _minhash_process_batch,
+        band_store_retract,
+        compact_band_store,
+    )
+
+    d = str(tmp_path / "mh_uri")
+    schema = "doc_id long, text string"
+    mk = lambda i: " ".join(f"w{i}_{j}" for j in range(50))
+    kw = dict(store_path=d + "/plain", out_path=d + "/out", threshold=0.5)
+    for b in range(4):
+        _minhash_process_batch(
+            spark.createDataFrame([(b * 10 + 1, mk(b))], schema), b, **kw
+        )
+    shutil.copytree(d + "/plain", d + "/uri")
+
+    def state(path):
+        store = spark.read.parquet(path)
+        rows = sorted(
+            tuple(r)
+            for r in store.select("batch_id", "doc_id", "band", "bucket")
+            .collect()
+        )
+        probe_df = spark.createDataFrame(
+            [(901, mk(1).replace("w1_3", "edit", 1)), (902, mk(99))], schema
+        )
+        surv = minhash_incremental(
+            probe_df, store.drop("batch_id"), threshold=0.5
+        )
+        verdict = sorted(
+            r.doc_id for r in surv.select("doc_id").distinct().collect()
+        )
+        return rows, verdict
+
+    before = state(d + "/plain")
+    assert before[1] == [902]
+    plain = compact_band_store(spark, d + "/plain", n_files=2)
+    uri = compact_band_store(spark, "file://" + d + "/uri", n_files=2)
+    assert plain == uri
+    assert uri["files_before"] > uri["files_after"] > 0
+    assert uri["rows"] == len(before[0])
+    after = state(d + "/uri")
+    assert after == state(d + "/plain")
+    assert after[1] == before[1]
+    assert {r[0] for r in after[0]} == {-1, 3}
+    assert sorted(r[1:] for r in after[0]) == sorted(r[1:] for r in before[0])
+
+    assert band_store_retract(spark, "file://" + d + "/uri", [31]) > 0
+    history = sorted(r[1:] for r in after[0] if r[0] == -1)
+    compact_band_store(spark, "file://" + d + "/uri", n_files=2)
+    again = state(d + "/uri")[0]
+    assert sorted(r[1:] for r in again) == history
+    assert {r[0] for r in again} == {-1}
+
+
 def test_stream_windowed_agg_matches_batch_on_union(spark, ordered_stream_dir):
     """End-to-end batch equivalence for the windowed aggregation: in
     complete mode the memory sink holds the FULL aggregate state after the
