@@ -1,11 +1,13 @@
 """Distributed Lloyd's k-means — fully declarative, engine-replayable.
 
-The companion surface to similarity.py's ``ivf_centroids_kmeans``
-(which fits centroids driver-side in numpy on a BOUNDED collected
-sample, the right call for IVF index builds): here every step —
-assignment, centroid update, iteration — is a DataFrame plan, so the
-fit itself distributes, nothing is collected, and a SQL oracle can
-replay the whole unrolled iteration exactly. The iterative-algorithm
+The companion surface to similarity.py's IVF fits — there,
+``ivf_centroids_kmeans`` runs Lloyd with numpy assignment inside
+``mapInPandas`` against broadcast centroids (one groupBy-avg collected
+per iteration), and ``ivf_store_refit``'s sampled path fits driver-side
+in numpy on a BOUNDED collected sample. Here every step — assignment,
+centroid update, iteration — is a DataFrame plan, so the fit itself
+distributes, nothing is collected, and a SQL oracle can replay the
+whole unrolled iteration exactly. The iterative-algorithm
 family next to graph.py's pagerank/BFS and components.py's
 min-label propagation.
 

@@ -19,129 +19,21 @@ the reference, whose dedup surface is replace-merge §2.5 and DISTINCT §2.3):
   embedding near-dup — cosine > threshold pairs; see operators.similarity.
 
 All hot paths are built-in functions (xxhash64, explode, groupBy) — JVM-side,
-no Python UDFs.
+no Python UDFs. Intermediates a plan consumes more than once persist through
+the session relation cache (session.shared_persist), so repeated calls over
+the same input reuse one persisted relation and release_caches() frees it.
 """
 
 from __future__ import annotations
 
-import itertools
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from arrowhouse_spark.session import shuffle_parts
+from arrowhouse_spark.session import shared_persist, shuffle_parts
 
 from arrowhouse_spark.operators.text import fingerprint, tokens
-
-
-# ---------------------------------------------------------------------------
-# Operator-internal cache registry (round-5 verdict item 3 / advice): several
-# operators persist an intermediate relation that their own plan consumes more
-# than once (minhash signatures, the inverted shingle relation, dup_spans'
-# hashed windows). A bare .cache() at those sites registered a FRESH
-# never-released RDD on every call, so a long-lived session making many
-# distinct calls accumulated storage until LRU eviction. Instead: persist
-# keyed by (application, operator tag, input plan's semantic hash) — repeated
-# calls over the same logical input reuse ONE persisted relation, and
-# release_caches() gives sessions a deterministic teardown. semanticHash()
-# is Spark's own canonical plan identity (stable across Python objects that
-# describe the same computation).
-# ---------------------------------------------------------------------------
-_CACHE_REGISTRY: dict[tuple, list[DataFrame]] = {}
-
-# Hard cap on live registry entries: inputs whose plans contain per-call
-# checkpoint leaves (LogicalRDD) get a UNIQUE semantic hash per invocation,
-# so a long session composing pipelines would otherwise grow one persisted
-# entry per call. At the cap the OLDEST entry is unpersisted FIFO — the
-# within-call sharing (the reason these persists exist) is unaffected, and
-# steady-state storage is bounded.
-_CACHE_REGISTRY_MAX = 64
-
-# Staleness caveat (documented, round-6 advice): a registry hit returns the
-# PERSISTED relation — if the underlying files were rewritten in-place within
-# the same session, the hit serves the old snapshot (exactly like Spark's own
-# dataset cache). Sessions that rewrite inputs should call release_caches()
-# (or spark.catalog.refreshByPath) between the rewrite and the next operator
-# call; per-call opt-out below.
-CACHE_ENABLED = True
-
-# sequence source for opt-out registry keys (see _shared_persist)
-_OPTOUT_SEQ = itertools.count()
-
-
-def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-    """True iff the two DataFrames have semantically equal analyzed plans.
-    semanticHash() is a 32-bit digest, not an identity — Spark's CacheManager
-    confirms `sameResult` after a hash match for the same reason (round-6
-    advice). On Spark Connect (no JVM handle) fall back to comparing
-    schemas — a collision that ALSO matches the schema is then accepted,
-    the best check available there."""
-    try:
-        qa = a._jdf.queryExecution().analyzed()  # noqa: SLF001
-        qb = b._jdf.queryExecution().analyzed()  # noqa: SLF001
-        return bool(qa.sameResult(qb))
-    except Exception:  # noqa: BLE001 — Connect / stopped context
-        return a.schema == b.schema
-
-
-def _evict_to_cap() -> None:
-    while len(_CACHE_REGISTRY) >= _CACHE_REGISTRY_MAX:
-        oldest_key = next(iter(_CACHE_REGISTRY))
-        for old in _CACHE_REGISTRY.pop(oldest_key):
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — source context stopped
-                pass
-
-
-def _shared_persist(df: DataFrame, tag: str) -> DataFrame:
-    if not CACHE_ENABLED:
-        # opt-out disables cross-call REUSE (the staleness hazard), not
-        # lifetime tracking: the per-call persist still lands in the
-        # registry under a unique never-matched key, so the FIFO cap and
-        # release_caches() bound the footprint instead of leaking one
-        # orphaned persisted RDD per call (round-7 review)
-        persisted = df.persist()
-        _evict_to_cap()
-        # monotonic counter, not id(): ids recycle after GC and a collision
-        # would overwrite a live registry slot, orphaning its persist
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            tag,
-            "__optout__",
-            next(_OPTOUT_SEQ),
-        )
-        _CACHE_REGISTRY[key] = [persisted]
-        return persisted
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        tag,
-        df.semanticHash(),
-    )
-    for cached in _CACHE_REGISTRY.get(key, ()):
-        if _same_plan(cached, df):
-            return cached
-    _evict_to_cap()
-    persisted = df.persist()
-    _CACHE_REGISTRY.setdefault(key, []).append(persisted)
-    return persisted
-
-
-def release_caches() -> int:
-    """Unpersist every operator-internal cached relation; returns how many
-    were released. Safe to call with a stopped SparkContext (entries from a
-    dead application are simply dropped)."""
-    n = 0
-    for dfs in _CACHE_REGISTRY.values():
-        for df in dfs:
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:  # noqa: BLE001 — context already stopped
-                pass
-    _CACHE_REGISTRY.clear()
-    return n
 
 
 def dedup_exact(
@@ -353,7 +245,7 @@ def minhash_lsh_candidates(
     sizes = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__anchor")
     )
-    tagged = _shared_persist(
+    tagged = shared_persist(
         banded.join(sizes, ["band", "bucket"]), "lsh_tagged"
     )
     normal = tagged.filter(F.col("__n") <= max_bucket_size)
@@ -420,7 +312,7 @@ def minhash_dedup(
     enables the hot-bucket anchor fallback (see minhash_lsh_candidates)."""
     # cache: the LSH candidate self-join references the signature twice
     # (left/right); without persist the whole shingle+hash pipeline runs twice
-    sig = _shared_persist(
+    sig = shared_persist(
         minhash_signature(
             df, text_col, id_col, num_hashes, shingle_n, shingles=shingles
         ),
@@ -470,7 +362,7 @@ def minhash_incremental(
     itself dropped by the store — matching the oracle and C4-style batch
     pipelines; transitive-canonical resolution is dedup_components'
     job when needed."""
-    sig = _shared_persist(
+    sig = shared_persist(
         minhash_signature(
             new_df, text_col, id_col, num_hashes, shingle_n, shingles=shingles
         ),
@@ -1008,18 +900,18 @@ def _jaccard_inverted(sh: DataFrame, id_col: str, threshold: float) -> DataFrame
     # aggregation parallelize (at cluster scale this is the shuffle that makes
     # the operator linear-per-executor).
     #
-    # Already-persisted input (the suite's shared-relation cache) is trusted
-    # as-is: caching AGAIN here would register a fresh never-unpersisted RDD
-    # on every invocation (bench runs each query 3×), accumulating dead
-    # cache entries and rising pass-to-pass times. Without the local cache
-    # the join's own exchange requirement restores parallelism, and Spark's
+    # Already-persisted input (a suite relation from the session relation
+    # cache) is trusted as-is: persisting a repartition of it again would pin
+    # a second copy of the same shingles. Without the local persist the
+    # join's own exchange requirement restores parallelism, and Spark's
     # ReuseExchange folds the two identical self-join sides into one.
     lvl = sh.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         n_part = shuffle_parts(sh.sparkSession)
         # persist: consumed three times (sizes + both sides of the
-        # self-join); registry-keyed so repeated calls don't stack copies
-        sh = _shared_persist(sh.repartition(n_part, "shingle"), "jaccard_sh")
+        # self-join); through the session relation cache, so repeated calls
+        # don't stack copies
+        sh = shared_persist(sh.repartition(n_part, "shingle"), "jaccard_sh")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     l, r = sh.alias("l"), sh.alias("r")
     inter = (
@@ -1103,7 +995,7 @@ def ngram_containment_pairs(
     lvl = sh.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
         n_part = shuffle_parts(sh.sparkSession)
-        sh = _shared_persist(sh.repartition(n_part, "shingle"), "jaccard_sh")
+        sh = shared_persist(sh.repartition(n_part, "shingle"), "jaccard_sh")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     l, r = sh.alias("l"), sh.alias("r")
     inter = (
@@ -1214,9 +1106,9 @@ def dup_spans(
         ).select(F.col(id_col), "pos", F.xxhash64("__win").alias("__h"))
         n_part = shuffle_parts(df.sparkSession)
         # persist: consumed twice (count build + probe); see docstring
-        # numbers. Registry-keyed (round-5 advice: the bare cache() pinned a
-        # fresh copy per call and never released it)
-        wins = _shared_persist(wins.repartition(n_part, "__h"), "dup_spans_wins")
+        # numbers. Through the session relation cache: a bare cache() would
+        # pin a fresh copy per call and never release it
+        wins = shared_persist(wins.repartition(n_part, "__h"), "dup_spans_wins")
     hot = (
         wins.groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1293,7 +1185,7 @@ def remove_dup_spans(
         ),
     ).select(F.col(id_col), "pos", F.xxhash64("__win").alias("__h"))
     n_part = shuffle_parts(df.sparkSession)
-    wins = _shared_persist(wins.repartition(n_part, "__h"), "rm_spans_wins")
+    wins = shared_persist(wins.repartition(n_part, "__h"), "rm_spans_wins")
     own = wins.groupBy("__h").agg(
         F.count(F.lit(1)).alias("__c"),
         F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__own"),
@@ -1531,7 +1423,7 @@ def ngram_jaccard_prefix_pairs(
                 )
     lvl = sh.storageLevel
     if not (lvl.useMemory or lvl.useDisk):
-        sh = _shared_persist(
+        sh = shared_persist(
             sh.repartition(shuffle_parts(sh.sparkSession), "shingle"),
             "jaccard_prefix_sh",
         )

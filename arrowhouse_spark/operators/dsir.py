@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.operators.text import tokens
+from arrowhouse_spark.session import shared_persist
 
 
 def _bucket(col: Column, n_buckets: int) -> Column:
@@ -53,11 +54,9 @@ def dsir_importance(
         F.coalesce(target.cast("long"), F.lit(0)).alias("__is_t"),
     ).withColumn("bucket", _bucket(F.col("tok"), n_buckets))
     # two consumers (bucket counts + per-doc scoring) — persist through the
-    # capped shared registry so the corpus tokenize/explode/md5 runs once,
-    # not twice (round-7 review; same convention as minhash's signature)
-    from arrowhouse_spark.operators.dedup import _shared_persist
-
-    toks = _shared_persist(toks, "dsir_toks")
+    # session relation cache so the corpus tokenize/explode/md5 runs once,
+    # not twice (same convention as minhash's signature)
+    toks = shared_persist(toks, "dsir_toks")
 
     counts = toks.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("c_raw"),

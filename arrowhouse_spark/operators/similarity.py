@@ -228,6 +228,29 @@ def ann_cosine_lsh_multi(
     return cosine_topk_query(cand, query, vec_col, id_col, k)
 
 
+def _seed_sample(
+    df: DataFrame, vec_col: str, id_col: str, n: int, seed: int | None
+):
+    """The IVF family's deterministic centroid seeds: the first ``n`` vectors
+    of ``df`` in xxhash64(id, seed) order — stable across runs and
+    partitionings — or in ascending id order when ``seed`` is None, collected
+    and L2-normalized into an n × dim float64 matrix (0 rows on an empty
+    input)."""
+    import numpy as np
+
+    key = (
+        F.col(id_col).asc()
+        if seed is None
+        else F.xxhash64(F.col(id_col).cast("string"), F.lit(seed))
+    )
+    rows = df.select(id_col, vec_col).orderBy(key).limit(n).collect()
+    if not rows:
+        return np.empty((0, 0))
+    m = np.array([r[1] for r in rows], dtype=np.float64)
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    return m
+
+
 def ivf_centroids_kmeans(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -246,14 +269,7 @@ def ivf_centroids_kmeans(
     L2-normalized centroid ndarray."""
     import numpy as np
 
-    cent_rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    c = _seed_sample(df, vec_col, id_col, n_centroids, seed)
     dim = c.shape[1]
     for _ in range(iters):
         assigned = _assign_to_centroids(df, c, vec_col, out="__c")
@@ -343,27 +359,17 @@ def semantic_dedup(
     training-data superset."""
     import numpy as np
 
-    if init == "min_id":
-        cent_rows = (
-            df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(n_clusters).collect()
-        )
-    elif init == "hash":
-        cent_rows = (
-            df.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-            .limit(n_clusters)
-            .collect()
-        )
-    else:
+    if init not in ("min_id", "hash"):
         raise ValueError(f"init must be 'min_id' or 'hash', got {init!r}")
-    if not cent_rows:
+    c = _seed_sample(
+        df, vec_col, id_col, n_clusters, seed if init == "hash" else None
+    )
+    if len(c) == 0:
         # empty batch (daily-ingest pipelines hit this): empty result with
         # the contract schema, not an IndexError from a 0-row init matrix
         return df.sparkSession.createDataFrame(
             [], "id long, cluster int, max_dup_cos double, is_kept boolean"
         )
-    c = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
     dim = c.shape[1]
     for _ in range(iters):
         assigned = _assign_to_centroids(df, c, vec_col, out="__c", round_dp=6)
@@ -470,16 +476,7 @@ def ivf_assign(
     At 100 TB the assignment runs once at ingest and ``out`` becomes a
     partition/cluster column, so a probe is partition pruning, not a scan.
     """
-    import numpy as np
-
-    cent_rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    c = _seed_sample(df, vec_col, id_col, n_centroids, seed)
     return _assign_to_centroids(df, c, vec_col, out=out)
 
 
@@ -500,19 +497,12 @@ def ann_cosine_ivf(
     where hyperplane buckets are data-oblivious."""
     import numpy as np
 
-    cent_rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    c = _seed_sample(df, vec_col, id_col, n_centroids, seed)
     q = np.asarray(list(query), dtype=np.float64)
     q /= max(np.linalg.norm(q), 1e-12)
     probes = [int(i) for i in np.argsort(-(c @ q))[:nprobe]]
-
-    assigned = ivf_assign(df, vec_col, id_col, n_centroids, seed)
+    # the ivf_assign quantizer over the sample already collected
+    assigned = _assign_to_centroids(df, c, vec_col, out="centroid")
     cand = assigned.filter(F.col("centroid").isin(probes))
     return cosine_topk_query(cand, query, vec_col, id_col, k)
 
@@ -800,18 +790,9 @@ def ivf_store_init(
     and v* layout directories from a previous refit lineage are removed
     first, so a re-init cannot leave readers resolving into a stale
     versioned layout."""
-    import numpy as np
-
     spark = df.sparkSession
     reset_versions(spark, store_path)
-    cent_rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    c = _seed_sample(df, vec_col, id_col, n_centroids, seed)
     _write_centroids(spark, c, store_path + "/centroids")
     assigned = _assign_to_centroids(
         df.select(id_col, vec_col), c, vec_col, round_dp=6
@@ -1420,14 +1401,7 @@ def ivf_store_refit(
             store, n_centroids, iters, vec_col, id_col
         )
     else:
-        sample_rows = (
-            store.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-            .limit(sample_cap)
-            .collect()
-        )
-        m = np.array([r[1] for r in sample_rows], dtype=np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        m = _seed_sample(store, vec_col, id_col, sample_cap, seed)
         if len(m) < n_centroids:
             raise ValueError(
                 f"sample of {len(m)} vectors cannot seed {n_centroids} "

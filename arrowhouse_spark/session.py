@@ -8,8 +8,9 @@ SURVEY.md §7 Phase 6.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -86,3 +87,96 @@ def shuffle_parts(spark: SparkSession) -> int:
             return int(spark.sparkContext.defaultParallelism)
         except Exception:  # noqa: BLE001 — Spark Connect: no SparkContext
             return 200
+
+
+# ---------------------------------------------------------------------------
+# Session relation cache. ArrowHouse keeps no state between queries; in Spark
+# the host's mechanism for that is ``persist`` within a session, and every
+# relation the engine persists for reuse across calls goes through this one
+# registry: one dict, one cap, one FIFO eviction, one release.
+#
+# Two lookups share the dict, because their callers differ:
+#   - cached_relation(key, build): the suite's shared scans (shingles, token
+#     hashes, windows) under EXACT keys (appId, sf_dir, tag, ...); build()
+#     runs only on a miss. A plan-hash key would rebuild and hash the plan on
+#     every call — 0.20-0.26 s per warm call for the guarded shingle plan at
+#     sf0.1, against 0.1 ms for an exact-key hit.
+#   - shared_persist(df, tag): operator intermediates consumed more than once
+#     by their own plan (minhash signatures, inverted shingle relations,
+#     dup_spans windows) under (appId, tag, df.semanticHash()). semanticHash
+#     is Spark's canonical plan identity but only a 32-bit digest, so a hit
+#     is confirmed with sameResult, as Spark's own CacheManager does.
+#
+# Cap: _CACHE_MAX keys; at the cap the OLDEST key is unpersisted and dropped
+# (FIFO). Two passes of the 212 headline bench queries at sf0.1 on local[4]
+# touch 6 suite keys (all hit on pass 2) and 7 operator keys after pass 1,
+# plus 2 per further pass (pipeline_pretrain_full{,_bpe}'s dup_spans inputs
+# carry checkpoint leaves, so each call hashes anew): a 3-pass bench holds at
+# most 17 entries, so 64 evicts nothing there while bounding a long-lived
+# session.
+#
+# Staleness: a hit returns the PERSISTED relation, exactly like Spark's
+# dataset cache. A session that rewrites an input in place must call
+# release_caches() (or spark.catalog.refreshByPath) before the next call.
+# ---------------------------------------------------------------------------
+_CACHE: dict[tuple, list[DataFrame]] = {}
+_CACHE_MAX = 64
+
+
+def _unpersist(df: DataFrame) -> bool:
+    try:
+        df.unpersist()
+        return True
+    except Exception:  # noqa: BLE001 — source context already stopped
+        return False
+
+
+def _admit(key: tuple, make: Callable[[], DataFrame]) -> DataFrame:
+    """Evict FIFO to make room, then cache ``make()`` under ``key``. Eviction
+    runs first so an evicted entry with an equal plan cannot unpersist the
+    relation just made."""
+    while len(_CACHE) >= _CACHE_MAX:
+        for old in _CACHE.pop(next(iter(_CACHE))):
+            _unpersist(old)
+    df = make()
+    _CACHE.setdefault(key, []).append(df)
+    return df
+
+
+def cached_relation(key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """The relation cached under the exact ``key``; ``build()`` (which
+    chooses whether to persist) runs only on a miss."""
+    hit = _CACHE.get(key)
+    return hit[0] if hit else _admit(key, build)
+
+
+def _same_plan(a: DataFrame, b: DataFrame) -> bool:
+    """True iff the two DataFrames have semantically equal analyzed plans. On
+    Spark Connect (no JVM handle) fall back to comparing schemas — a
+    collision that ALSO matches the schema is then accepted, the best check
+    available there."""
+    try:
+        qa = a._jdf.queryExecution().analyzed()  # noqa: SLF001
+        qb = b._jdf.queryExecution().analyzed()  # noqa: SLF001
+        return bool(qa.sameResult(qb))
+    except Exception:  # noqa: BLE001 — Connect / stopped context
+        return a.schema == b.schema
+
+
+def shared_persist(df: DataFrame, tag: str) -> DataFrame:
+    """``df`` persisted once per logical plan: repeated calls over the same
+    input reuse one persisted relation instead of stacking copies."""
+    key = (df.sparkSession.sparkContext.applicationId, tag, df.semanticHash())
+    for cached in _CACHE.get(key, ()):
+        if _same_plan(cached, df):
+            return cached
+    return _admit(key, df.persist)
+
+
+def release_caches() -> int:
+    """Unpersist and drop every cached relation; returns how many were
+    released. Safe with a stopped SparkContext (entries of a dead
+    application are simply dropped)."""
+    n = sum(_unpersist(df) for dfs in _CACHE.values() for df in dfs)
+    _CACHE.clear()
+    return n

@@ -544,7 +544,8 @@ def compact_band_store(
     out, sort_cols = df, ["band", "bucket"]
     if part_col is not None:
         b = F.coalesce(F.col("batch_id"), F.lit(-1).cast("long"))
-        max_b = df.agg(F.max(b)).collect()[0][0]
+        # one scan of the old store for both numbers the compaction needs
+        max_b, rows = df.agg(F.max(b), F.count(F.lit(1))).collect()[0]
         out = df.withColumn(
             "batch_id",
             F.when(b == F.lit(max_b), b).otherwise(F.lit(-1).cast("long")),
@@ -560,7 +561,8 @@ def compact_band_store(
     if part_col is not None:
         w = w.partitionBy(part_col)
     w.parquet(tmp)
-    rows = df.count()
+    if part_col is None:
+        rows = df.count()
     old = store_path.rstrip("/") + ".compact_old"
     remove(spark, old)
     rename(spark, store_path, old)

@@ -1,25 +1,13 @@
 """Query suite chunk: see the package __init__ docstring. Positional slice of the original suite.py (registration order is load-bearing for the driver rotation — do not reorder)."""
 
-# ruff: noqa: F401  (shared header imports; unused ones kept for uniformity)
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arrowhouse_spark.session import shuffle_parts
-
 from arrowhouse_spark.compile import apply_program
-from arrowhouse_spark.functions import hashing
-from arrowhouse_spark.operators.dedup import (
-    dedup_exact,
-    minhash_dedup,
-    ngram_jaccard_pairs,
-    simhash,
-)
+from arrowhouse_spark.operators.dedup import dedup_exact
 from arrowhouse_spark.operators.asof import asof_join
-from arrowhouse_spark.operators.merge import merge_sorted, replace_merge_agg
 from arrowhouse_spark.operators.sessions import session_stats
 from arrowhouse_spark.operators.setops import except_all, intersect
 from arrowhouse_spark.operators.similarity import (
@@ -27,14 +15,6 @@ from arrowhouse_spark.operators.similarity import (
     ann_cosine_lsh_multi,
     cosine_topk_query,
     embedding_neardup_pairs,
-)
-from arrowhouse_spark.operators.sort import SortKey, top_k
-from arrowhouse_spark.operators.text import (
-    LANG_MARKERS,
-    fingerprint,
-    lang_id,
-    quality_score,
-    token_count,
 )
 from arrowhouse_spark.program import (
     AggOp,
@@ -46,7 +26,6 @@ from arrowhouse_spark.program import (
     ProgramStep,
     const,
 )
-
 
 from arrowhouse_spark.suite import (
     _events,
@@ -694,8 +673,6 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = make_fake_payloads(docs, id_col="doc_id").repartition(8)
     decoded = decode_images(media)
     return decoded.groupBy("width", "height").agg(F.count(F.lit(1)).alias("n"))
-
-
 
 
 @register(

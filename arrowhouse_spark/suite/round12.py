@@ -2,7 +2,6 @@
 stdlib media coverage (palette PNG, stereo WAV), IVF refit. Registration
 order is load-bearing for the driver rotation — append only."""
 
-# ruff: noqa: F401  (shared header imports; unused ones kept for uniformity)
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession

@@ -469,12 +469,11 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(f"bench: could not write detail: {e}", file=sys.stderr)
 
-    # deterministic teardown of BOTH cache registries (round-6 verdict #6)
+    # deterministic teardown of the session relation cache
     try:
-        from arrowhouse_spark.operators.dedup import release_caches
+        from arrowhouse_spark.session import release_caches
 
         release_caches()
-        suite.release_rel_caches()
     except Exception:  # noqa: BLE001 — teardown is best-effort
         pass
 

@@ -921,6 +921,7 @@ def test_operator_cache_registry_bounded(spark):
     (application, tag, input semantic hash): repeated calls over the same
     logical input must NOT grow the persisted-RDD list, and
     release_caches() must empty it."""
+    from arrowhouse_spark import session
     from arrowhouse_spark.operators import dedup
 
     df = spark.createDataFrame(
@@ -931,11 +932,11 @@ def test_operator_cache_registry_bounded(spark):
 
     cm = spark._jsparkSession.sharedState().cacheManager()
 
-    dedup.release_caches()
-    base_entries = len(dedup._CACHE_REGISTRY)
+    session.release_caches()
+    base_entries = len(session._CACHE)
     out1 = dedup.dup_spans(df, window=3)
     out1.count()
-    assert len(dedup._CACHE_REGISTRY) == base_entries + 1
+    assert len(session._CACHE) == base_entries + 1
     assert not cm.isEmpty()  # the windows relation did persist
     # the plan actually consumes the cached relation (not a dead persist)
     plan = out1._jdf.queryExecution().executedPlan().toString()
@@ -943,15 +944,14 @@ def test_operator_cache_registry_bounded(spark):
     # a second structurally-identical call must REUSE the entry, not stack
     # a fresh one (the round-5 leak)
     dedup.dup_spans(df, window=3).count()
-    assert len(dedup._CACHE_REGISTRY) == base_entries + 1
+    assert len(session._CACHE) == base_entries + 1
     # a different input gets its own entry
     dedup.dup_spans(df.limit(10), window=3).count()
-    assert len(dedup._CACHE_REGISTRY) == base_entries + 2
+    assert len(session._CACHE) == base_entries + 2
     # teardown releases every registered entry (cm emptiness is not
-    # asserted — OTHER session-level caches, e.g. the suite's shared
-    # relations, may legitimately coexist)
-    assert dedup.release_caches() >= 2
-    assert len(dedup._CACHE_REGISTRY) == 0
+    # asserted — relations persisted outside the registry may coexist)
+    assert session.release_caches() >= 2
+    assert len(session._CACHE) == 0
 
 
 def test_url_filter_hand_checked(spark):
@@ -1040,28 +1040,28 @@ def test_normalize_text_forms_and_nulls(spark):
 
 
 def test_operator_cache_registry_capped(spark):
-    """Entries beyond _CACHE_REGISTRY_MAX evict FIFO (checkpoint-keyed
+    """Entries beyond session._CACHE_MAX evict FIFO (checkpoint-keyed
     pipeline inputs would otherwise grow one persisted entry per call)."""
     from pyspark.sql import functions as F
 
-    from arrowhouse_spark.operators import dedup
+    from arrowhouse_spark import session
 
-    dedup.release_caches()
-    orig = dedup._CACHE_REGISTRY_MAX
-    dedup._CACHE_REGISTRY_MAX = 3
+    session.release_caches()
+    orig = session._CACHE_MAX
+    session._CACHE_MAX = 3
     try:
         df = spark.createDataFrame(
             [(i, "a b c d") for i in range(8)], "doc_id: long, text: string"
         )
         for k in range(5):
             # distinct plans → distinct semantic hashes → distinct entries
-            dedup._shared_persist(df.filter(F.col("doc_id") >= k), f"t{k}")
-        assert len(dedup._CACHE_REGISTRY) == 3
-        tags = [k[1] for k in dedup._CACHE_REGISTRY]
+            session.shared_persist(df.filter(F.col("doc_id") >= k), f"t{k}")
+        assert len(session._CACHE) == 3
+        tags = [k[1] for k in session._CACHE]
         assert tags == ["t2", "t3", "t4"]  # FIFO: oldest two evicted
     finally:
-        dedup._CACHE_REGISTRY_MAX = orig
-        dedup.release_caches()
+        session._CACHE_MAX = orig
+        session.release_caches()
 
 
 def test_vocab_encode_checksum_path_consistent(spark):
@@ -1300,46 +1300,21 @@ def test_shared_persist_survives_hash_collision(spark, monkeypatch):
     one. Forced by monkeypatching semanticHash to a constant."""
     from pyspark.sql import DataFrame
 
-    from arrowhouse_spark.operators import dedup
+    from arrowhouse_spark import session
 
-    dedup.release_caches()
+    session.release_caches()
     monkeypatch.setattr(DataFrame, "semanticHash", lambda self: 42)
     df = spark.createDataFrame(
         [(1, "x"), (2, "y"), (3, "z")], ["doc_id", "text"]
     )
-    a = dedup._shared_persist(df.filter(F.col("doc_id") >= 2), "collide")
-    b = dedup._shared_persist(df.filter(F.col("doc_id") >= 3), "collide")
+    a = session.shared_persist(df.filter(F.col("doc_id") >= 2), "collide")
+    b = session.shared_persist(df.filter(F.col("doc_id") >= 3), "collide")
     assert a is not b, "colliding but different plans must not share"
     assert a.count() == 2 and b.count() == 1
     # same logical plan still reuses the persisted relation
-    c = dedup._shared_persist(df.filter(F.col("doc_id") >= 2), "collide")
+    c = session.shared_persist(df.filter(F.col("doc_id") >= 2), "collide")
     assert c is a
-    assert dedup.release_caches() >= 2
-
-
-def test_shared_persist_opt_out(spark):
-    """CACHE_ENABLED=False disables cross-call REUSE (per-session opt-out
-    for sources rewritten in place) but still tracks each per-call persist
-    under a unique key, so release_caches() and the FIFO cap bound the
-    footprint instead of leaking one orphaned persisted RDD per call."""
-    from arrowhouse_spark.operators import dedup
-
-    dedup.release_caches()
-    dedup.CACHE_ENABLED = False
-    try:
-        # two distinct objects with the SAME logical plan — the registry
-        # path would reuse one relation here; opt-out must not
-        df1 = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-        df2 = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-        a = dedup._shared_persist(df1, "optout")
-        b = dedup._shared_persist(df2, "optout")
-        assert a is not b, "opt-out must never reuse a cached relation"
-        # both persists are tracked and releasable
-        assert len(dedup._CACHE_REGISTRY) == 2
-        assert dedup.release_caches() == 2
-        assert len(dedup._CACHE_REGISTRY) == 0
-    finally:
-        dedup.CACHE_ENABLED = True
+    assert session.release_caches() >= 2
 
 
 def test_pii_scrub_empty_patterns_returns_zero(spark):

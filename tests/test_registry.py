@@ -59,31 +59,75 @@ def test_queries_order_respects_priority():
 
 
 def test_suite_rel_cache_capped(spark):
-    """Round-6 verdict #6: the suite-level relation cache enforces the
-    same hard cap + FIFO eviction + release discipline as the operator
-    registry in operators/dedup.py."""
-    from arrowhouse_spark import suite
+    """Suite relations go through the session relation cache: hard cap,
+    FIFO eviction, exact-key hits and one release."""
+    from arrowhouse_spark import session
 
-    suite.release_rel_caches()
-    orig = suite._REL_CACHE_MAX
-    suite._REL_CACHE_MAX = 3
+    session.release_caches()
+    orig = session._CACHE_MAX
+    session._CACHE_MAX = 3
     try:
         for k in range(5):
-            suite._rel_cached(
+            session.cached_relation(
                 ("app", "dir", f"t{k}"),
                 lambda k=k: spark.range(k + 1).toDF("v"),
             )
-        assert len(suite._REL_CACHE) == 3
-        tags = [key[2] for key in suite._REL_CACHE]
+        assert len(session._CACHE) == 3
+        tags = [key[2] for key in session._CACHE]
         assert tags == ["t2", "t3", "t4"]  # oldest two evicted FIFO
         # hit returns the cached object without eviction
-        a = suite._rel_cached(("app", "dir", "t4"), lambda: None)
-        assert a is suite._REL_CACHE[("app", "dir", "t4")]
-        assert suite.release_rel_caches() == 3
-        assert len(suite._REL_CACHE) == 0
+        a = session.cached_relation(("app", "dir", "t4"), lambda: None)
+        assert a is session._CACHE[("app", "dir", "t4")][0]
+        assert session.release_caches() == 3
+        assert len(session._CACHE) == 0
     finally:
-        suite._REL_CACHE_MAX = orig
-        suite.release_rel_caches()
+        session._CACHE_MAX = orig
+        session.release_caches()
+
+
+def test_suite_and_operator_relations_share_one_cache(spark):
+    """A suite relation (exact key) and an operator persist (plan key) count
+    against the same cap, evict each other in FIFO order, and one
+    release_caches() unpersists both kinds."""
+    from pyspark.sql import functions as F
+
+    from arrowhouse_spark import session
+
+    def persisted(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    def tags():
+        # suite keys are (app, sf_dir, tag, ...); operator keys (app, tag, hash)
+        return [k[2] if k[1] == "dir" else k[1] for k in session._CACHE]
+
+    session.release_caches()
+    orig = session._CACHE_MAX
+    session._CACHE_MAX = 3
+    try:
+        base = spark.range(20).toDF("v")
+
+        def rel(lo):
+            return base.filter(F.col("v") >= lo)
+
+        s0 = session.cached_relation(("app", "dir", "s0"), lambda: rel(10).persist())
+        o1 = session.shared_persist(rel(11), "o1")
+        s2 = session.cached_relation(("app", "dir", "s2"), lambda: rel(12).persist())
+        o3 = session.shared_persist(rel(13), "o3")
+        # the operator entry evicted the oldest entry, a suite relation
+        assert tags() == ["o1", "s2", "o3"]
+        assert not persisted(s0)
+        s4 = session.cached_relation(("app", "dir", "s4"), lambda: rel(14).persist())
+        # the suite entry evicted the oldest entry, an operator relation
+        assert tags() == ["s2", "o3", "s4"]
+        assert not persisted(o1)
+        assert all(persisted(df) for df in (s2, o3, s4))
+        assert session.release_caches() == 3
+        assert len(session._CACHE) == 0
+        assert not any(persisted(df) for df in (s2, o3, s4))
+    finally:
+        session._CACHE_MAX = orig
+        session.release_caches()
 
 
 def test_spark_entry_driver_contract(spark):

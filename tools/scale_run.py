@@ -762,15 +762,15 @@ def _minhash_skewed(c: Ctx) -> dict:
         t_def, n_def = timed(pairs_default.count)
         plan = pairs_default._jdf.queryExecution().executedPlan().toString()
         skew_marked = "skew=true" in plan
-    from arrowhouse_spark.operators import dedup as _dedup
+    from arrowhouse_spark.session import release_caches
 
-    _dedup.release_caches()  # capped run must not reuse the default's sig
+    release_caches()  # capped run must not reuse the default's sig
     t_cap, n_cap = timed(
         lambda: minhash_dedup(
             skewed, threshold=0.8, max_bucket_size=64
         ).count()
     )
-    _dedup.release_caches()
+    release_caches()
     return {
         "sec_default": t_def,
         "pairs_default": n_def,
