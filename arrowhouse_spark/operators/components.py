@@ -13,9 +13,16 @@ alternating large-star/small-star contraction (Kiveris et al., "Connected
 Components in MapReduce and Beyond"), O(log² n) rounds from the same
 join/groupBy building blocks.
 
-Scale notes: labels are localCheckpoint()ed every round — iterative Spark
-jobs otherwise accumulate lineage until planning itself dominates. The
-convergence probe is a LIMIT 1 anti-equality join, not a full count.
+Scale notes: both cluster algorithms localCheckpoint() every round —
+iterative Spark jobs otherwise accumulate lineage until planning itself
+dominates — and probe convergence with a LIMIT 1 query, not a full count.
+Every round still costs several jobs of fixed overhead, which a
+batch-sized subgraph does not need: the persistent label store
+(``components_incremental`` and its retract) collects a touched subgraph
+of at most ``idgate.BROADCAST_ID_LIMIT`` rows with integer ids and solves
+it on the driver with a union-find, in a bounded number of jobs. Larger
+subgraphs, and ids Python orders unlike Spark (floats: NaN, -0.0), take
+the star contraction on the cluster.
 """
 
 from __future__ import annotations
@@ -24,10 +31,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from arrowhouse_spark.operators import idgate
 from arrowhouse_spark.operators.idgate import gate_broadcast
 from arrowhouse_spark.operators.store import (
     compact_partitions,
+    long_frame,
     normalize_ids,
     read_small,
     read_store,
@@ -264,67 +274,89 @@ def dedup_keep_best(
     )
 
 
-def components_incremental(
-    new_edges: DataFrame,
-    store_path: str,
-    src: str = "src",
-    dst: str = "dst",
-    n_buckets: int = 16,
-) -> DataFrame:
-    """Incremental connected components over a persistent label store —
-    the missing incremental twin of the dedup stack: minhash_incremental
-    produces daily cross-batch duplicate PAIRS; this turns them into
-    stable CLUSTER ids without re-running CC over the full historical
-    edge set every day.
+def _union_find(pairs) -> dict:
+    """id -> the minimum id of its component, over integer ``pairs``."""
+    parent: dict = {}
 
-    Store = the current labeling (id, component, cb) at ``store_path``,
-    parquet partitioned by ``cb = hash_bucket(id)``. A converged
-    min-label assignment IS a star-contracted spanning forest of every
-    edge ever folded (each row is the edge id → component), so CC over
-    (stored stars ∪ new edges) equals CC over the full historical union
-    — the union-find invariant, maintained inductively per fold.
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    Per fold (all joins keyed; nothing global):
-      1. affected components = labels of the batch's vertices (broadcast
-         semi-join of the batch vertex set against the store);
-      2. affected members = store rows of those components — the one
-         full-store MAP-SIDE scan per fold (a broadcast semi-join);
-      3. large-star/small-star CC over (member stars ∪ new edges) — the
-         sub-graph is affected-components-sized, and stars are depth 1,
-         so rounds stay O(log² longest NEW chain);
-      4. delta = labels that changed or are new; if empty (replayed
-         batch), the fold is a no-op — idempotent by construction, the
-         stream_scd2 doctrine;
-      5. rewrite ONLY the delta's buckets via dynamic partition
-         overwrite, carrying those buckets' unaffected rows over.
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
 
-    Returns the delta labels (id, component) this fold committed.
 
-    Scale: the store is never shuffled — steps 1-2 are broadcast
-    semi-joins against batch-sized / affected-sized relations, step 5
-    reads only touched partitions. The known CC hazard (one giant
-    component making every fold touch it) is inherent to the problem,
-    not the increment. The reference engine has no graph operators —
-    extension surface, same doctrine as operators/graph.py."""
+def _bounded(df: DataFrame, room: int):
+    """``df``'s rows when there are at most ``room`` of them, else None."""
+    rows = df.limit(room + 1).collect()
+    return rows if len(rows) <= room else None
+
+
+def _label_frame(spark: SparkSession, ids, comps, id_type) -> DataFrame:
+    """Driver-built (id, component) labels, both columns ``id_type``."""
+    schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
+    )
+    cols = {"id": list(ids), "component": list(comps)}
+    return long_frame(spark, cols, schema)
+
+
+def _fold_on_driver(e: DataFrame, id_type, store, n_buckets: int):
+    """The fold's delta as sorted (id, component) pairs, from a union-find
+    over the batch's edges plus the affected members' stars. None when
+    the ids are not integers (Python orders floats unlike Spark) or the
+    touched subgraph holds more than idgate.BROADCAST_ID_LIMIT rows."""
     from arrowhouse_spark.operators.sampling import hash_bucket
 
-    spark = new_edges.sparkSession
-    e = (
-        new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    if not isinstance(id_type, T.IntegralType):
+        return None
+    lim = idgate.BROADCAST_ID_LIMIT
+    edges = _bounded(
+        e.select(
+            "src",
+            "dst",
+            hash_bucket("src", n_buckets, salt="cc").alias("scb"),
+            hash_bucket("dst", n_buckets, salt="cc").alias("dcb"),
+        ),
+        lim,
     )
-    store = read_store(spark, store_path)
-    has_meta = False
-    if store is not None:
-        n_buckets, has_meta = _resolve_n_buckets(spark, store_path, n_buckets)
+    if edges is None:
+        return None
+    old: dict = {}
+    if store is not None and edges:
+        spark = e.sparkSession
+        batch = sorted({v for r in edges for v in (r.src, r.dst)})
+        buckets = sorted({b for r in edges for b in (r.scb, r.dcb)})
+        acomps = (
+            store.filter(F.col("cb").isin(buckets))
+            .join(F.broadcast(long_frame(spark, {"id": batch})), "id", "semi")
+            .select("component")
+            .distinct()
+        )
+        members = _bounded(
+            store.join(F.broadcast(acomps), "component", "semi").select(
+                "id", "component"
+            ),
+            lim - len(edges),
+        )
+        if members is None:
+            return None
+        old = {r.id: r.component for r in members}
+    labels = _union_find([(r.src, r.dst) for r in edges] + list(old.items()))
+    return sorted((v, c) for v, c in labels.items() if old.get(v) != c)
 
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+
+def _fold_on_spark(e: DataFrame, verts: DataFrame, store, n_buckets: int):
+    """The fold's delta (id, component, cb) by star contraction of the
+    touched subgraph on the cluster; None when it is empty."""
+    from arrowhouse_spark.operators.sampling import hash_bucket
+
+    verts = verts.localCheckpoint()
     if store is not None:
         # prune the id-bucketed store to the batch vertices' buckets before
         # the semi-join (<= n_buckets values, known driver-side)
@@ -357,8 +389,7 @@ def components_incremental(
         union_e = e
 
     if union_e.isEmpty():
-        # keep the caller's vertex id type in the empty result
-        return verts.limit(0).withColumn("component", F.col("id"))
+        return None
 
     labels = connected_components_star(union_e)
     if members is not None:
@@ -377,8 +408,94 @@ def components_incremental(
     delta = delta.withColumn(
         "cb", hash_bucket("id", n_buckets, salt="cc")
     ).localCheckpoint()
-    if delta.isEmpty():
-        return delta.select("id", "component")
+    return None if delta.isEmpty() else delta
+
+
+def components_incremental(
+    new_edges: DataFrame,
+    store_path: str,
+    src: str = "src",
+    dst: str = "dst",
+    n_buckets: int = 16,
+) -> DataFrame:
+    """Incremental connected components over a persistent label store —
+    the missing incremental twin of the dedup stack: minhash_incremental
+    produces daily cross-batch duplicate PAIRS; this turns them into
+    stable CLUSTER ids without re-running CC over the full historical
+    edge set every day.
+
+    Store = the current labeling (id, component, cb) at ``store_path``,
+    parquet partitioned by ``cb = hash_bucket(id)``. A converged
+    min-label assignment IS a star-contracted spanning forest of every
+    edge ever folded (each row is the edge id → component), so CC over
+    (stored stars ∪ new edges) equals CC over the full historical union
+    — the union-find invariant, maintained inductively per fold.
+
+    Per fold (all joins keyed; nothing global):
+      1. affected components = labels of the batch's vertices (broadcast
+         semi-join of the batch vertex set against the store);
+      2. affected members = store rows of those components — the one
+         full-store MAP-SIDE scan per fold (a broadcast semi-join);
+      3. CC over (member stars ∪ new edges). A subgraph of at most
+         idgate.BROADCAST_ID_LIMIT rows with integer ids is collected
+         (the batch's edges with their buckets in one query, the members
+         of steps 1-2 in a second) and solved on the driver by a
+         union-find with min-id labels; a larger one, or one with other
+         ids, runs large-star/small-star contraction on the cluster;
+      4. delta = labels that changed or are new; if empty (replayed
+         batch), the fold is a no-op — idempotent by construction, the
+         stream_scd2 doctrine. A driver-solved delta goes back to Spark
+         as one Arrow table;
+      5. rewrite ONLY the delta's buckets via dynamic partition
+         overwrite, carrying those buckets' unaffected rows over.
+
+    Returns the delta labels (id, component) this fold committed.
+
+    Scale: the store is never shuffled — steps 1-2 are broadcast
+    semi-joins against batch-sized / affected-sized relations, step 5
+    rewrites only touched partitions (its carry read is not yet
+    bucket-pruned). A driver-solved fold runs a bounded
+    number of jobs whatever the longest new chain; the cluster path
+    needs O(log² n) star rounds of several jobs each. The known CC
+    hazard (one giant component making every fold touch it) is inherent
+    to the problem, not the increment; past the driver bound it is what
+    sends a fold to the cluster path. The reference engine has no graph
+    operators — extension surface, same doctrine as operators/graph.py."""
+    from arrowhouse_spark.operators.sampling import hash_bucket
+
+    spark = new_edges.sparkSession
+    e = (
+        new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    store = read_store(spark, store_path)
+    has_meta = False
+    if store is not None:
+        n_buckets, has_meta = _resolve_n_buckets(spark, store_path, n_buckets)
+
+    verts = (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    # the id type the cluster path would write: the batch's, widened
+    # with the store's (analysis only, no job)
+    typed = verts if store is None else verts.union(store.select("id"))
+    id_type = typed.schema["id"].dataType
+    pairs = _fold_on_driver(e, id_type, store, n_buckets)
+    if pairs is None:
+        delta = _fold_on_spark(e, verts, store, n_buckets)
+    elif pairs:
+        ids, comps = zip(*pairs)
+        delta = _label_frame(spark, ids, comps, id_type).withColumn(
+            "cb", hash_bucket("id", n_buckets, salt="cc")
+        )
+    else:
+        delta = None
+    if delta is None:
+        # keep the caller's vertex id type in the empty result
+        return verts.limit(0).withColumn("component", F.col("id"))
 
     rows = delta
     if store is not None:
@@ -413,58 +530,72 @@ def components_store_retract(
     )[0]
 
 
-def components_store_retract_counted(
-    spark: SparkSession,
-    store_path: str,
-    ids,
-    n_buckets: int | None = None,
-) -> tuple:
-    """Retract vertex ids from the persistent label store — the
-    GDPR/forget-this-document primitive components_incremental lacks
-    (round-10 verdict #1, CC half): remove each id's row, and when a
-    retracted id WAS its component's label (the minimum id), relabel the
-    surviving members to their new minimum — so the store stays a valid
-    converged labeling and later folds keep merging correctly.
-
-    SEMANTICS — cluster retraction, not graph vertex deletion: the store
-    keeps the star forest, not the original edges, so whether removing a
-    cut vertex would SPLIT a component is unknowable here. The surviving
-    members stay one component (the near-dup reading: their pairwise
-    verdicts routed through the retracted item are forgotten but the
-    cluster identity persists); callers needing exact split semantics
-    must re-run CC over the retained edge relation.
-
-    Per retract: locate = cb-bucket-pruned semi-join of the id set;
-    members of affected components come from one map-side full scan, as
-    in components_incremental; the rewrite touches ONLY buckets holding
-    a removed or relabeled row.
-    Returns (delta, removed): the RELABELED survivors (id, component) —
-    empty when no retracted id was a component label — and the number of
-    store rows removed (the stored-victim count, computed from the
-    already-located ``gone`` set so a forget sweep needs no second
-    bucket-pruned pass; round-12 review finding #5). A MISSING store
-    (never written,
-    or removed by a previous retract-everything) is an empty store: the
-    retract no-ops and returns the empty delta, whatever ``n_buckets``
-    says — this is what makes a cross-store forget sweep
-    (operators/forget.py) idempotently RE-RUNNABLE after a mid-sweep
-    failure even when an earlier attempt fully drained this store (and
-    took the meta file with it). Single-writer contract, as for every
-    store in this module."""
+def _retract_on_driver(spark: SparkSession, store: DataFrame, ids, n_buckets):
+    """(delta, removed, touch ids, touched buckets) from one collect of the
+    affected members with their buckets: the new minimum per component,
+    the relabeled survivors and the removed rows are worked out on the
+    driver. None when an id type is not an integer or the ids plus the
+    members hold more than idgate.BROADCAST_ID_LIMIT rows."""
     from arrowhouse_spark.operators.sampling import hash_bucket
 
-    ids = normalize_ids(spark, ids, "id")
-    empty = ids.limit(0).withColumn("component", F.col("id"))
-    store = read_store(spark, store_path)
-    if store is None:
-        return empty, 0
+    id_type = store.schema["id"].dataType
+    if not (
+        isinstance(id_type, T.IntegralType)
+        and isinstance(ids.schema["id"].dataType, T.IntegralType)
+    ):
+        return None
+    lim = idgate.BROADCAST_ID_LIMIT
+    hb = hash_bucket("id", n_buckets, salt="cc").alias("cb")
+    idrows = _bounded(ids.select("id", hb), lim)
+    if idrows is None:
+        return None
+    acomps = (
+        store.filter(F.col("cb").isin(sorted({r.cb for r in idrows})))
+        .join(F.broadcast(ids), "id", "semi")
+        .select("component")
+        .distinct()
+    )
+    members = _bounded(
+        store.join(F.broadcast(acomps), "component", "semi").select(
+            "id", "component", "cb"
+        ),
+        lim - len(idrows),
+    )
+    if members is None:
+        return None
+    retracted = {r.id for r in idrows}
+    newmin: dict = {}
+    for r in members:
+        if r.id not in retracted:
+            newmin[r.component] = min(newmin.get(r.component, r.id), r.id)
+    removed = [r for r in members if r.id in retracted]
+    relabeled = [
+        r
+        for r in members
+        if r.id not in retracted and newmin[r.component] != r.component
+    ]
+    delta = _label_frame(
+        spark,
+        [r.id for r in relabeled],
+        [newmin[r.component] for r in relabeled],
+        id_type,
+    )
+    touched = removed + relabeled
+    touch_ids = F.broadcast(long_frame(spark, {"id": [r.id for r in touched]}))
+    return delta, len(removed), touch_ids, sorted({r.cb for r in touched})
+
+
+def _retract_on_spark(store: DataFrame, ids: DataFrame, n_buckets: int):
+    """(delta, removed, touch ids, touched buckets) through checkpointed
+    cluster relations — the path for id sets and affected components above
+    the driver bound."""
+    from arrowhouse_spark.operators.sampling import hash_bucket
+
     # count-gate every id-set hint in this op: batch-sized forgets
     # broadcast, retention-sweep-sized sets (≥ idgate.BROADCAST_ID_LIMIT)
     # fall back to shuffle joins — the store side is cb-pruned or
     # semi-joined against affected components, so they stay delta-sized
     ids_j = gate_broadcast(ids)
-    n_buckets, _ = _resolve_n_buckets(spark, store_path, n_buckets)
-
     vbuckets = [
         r.cb
         for r in ids.select(hash_bucket("id", n_buckets, salt="cc").alias("cb"))
@@ -480,7 +611,7 @@ def components_store_retract_counted(
     )
     n_acomps = acomps.count()
     if n_acomps == 0:
-        return empty, 0  # none of the ids are in the store
+        return None, 0, None, []  # none of the ids are in the store
     acomps_j = gate_broadcast(acomps, n_rows=n_acomps)
 
     members = (
@@ -505,7 +636,6 @@ def components_store_retract_counted(
     touch_ids = (
         gone.unionByName(delta.select("id")).distinct().localCheckpoint()
     )
-    touch_ids_j = gate_broadcast(touch_ids)
     tvals = [
         r.cb
         for r in touch_ids.select(
@@ -514,6 +644,66 @@ def components_store_retract_counted(
         .distinct()
         .collect()
     ]
+    return delta, n_removed, gate_broadcast(touch_ids), tvals
+
+
+def components_store_retract_counted(
+    spark: SparkSession,
+    store_path: str,
+    ids,
+    n_buckets: int | None = None,
+) -> tuple:
+    """Retract vertex ids from the persistent label store — the
+    GDPR/forget-this-document primitive components_incremental lacks
+    (round-10 verdict #1, CC half): remove each id's row, and when a
+    retracted id WAS its component's label (the minimum id), relabel the
+    surviving members to their new minimum — so the store stays a valid
+    converged labeling and later folds keep merging correctly.
+
+    SEMANTICS — cluster retraction, not graph vertex deletion: the store
+    keeps the star forest, not the original edges, so whether removing a
+    cut vertex would SPLIT a component is unknowable here. The surviving
+    members stay one component (the near-dup reading: their pairwise
+    verdicts routed through the retracted item are forgotten but the
+    cluster identity persists); callers needing exact split semantics
+    must re-run CC over the retained edge relation.
+
+    Per retract: the id set and the members of the affected components
+    (cb-bucket-pruned semi-join of the ids, then one map-side full scan,
+    as in components_incremental) are collected once, with each member's
+    bucket, when together they hold at most idgate.BROADCAST_ID_LIMIT
+    rows of integer ids; the new minimum per component, the relabeled
+    survivors, the removed count and the touched buckets are then
+    worked out on the driver. Larger sets, or other id types, take the
+    same steps through checkpointed cluster relations. Either way the
+    rewrite touches ONLY buckets holding a removed or relabeled row.
+    Returns (delta, removed): the RELABELED survivors (id, component) —
+    empty when no retracted id was a component label — and the number of
+    store rows removed (the stored-victim count, computed from the
+    already-located ``gone`` set so a forget sweep needs no second
+    bucket-pruned pass; round-12 review finding #5). A MISSING store
+    (never written,
+    or removed by a previous retract-everything) is an empty store: the
+    retract no-ops and returns the empty delta, whatever ``n_buckets``
+    says — this is what makes a cross-store forget sweep
+    (operators/forget.py) idempotently RE-RUNNABLE after a mid-sweep
+    failure even when an earlier attempt fully drained this store (and
+    took the meta file with it). Single-writer contract, as for every
+    store in this module."""
+    from arrowhouse_spark.operators.sampling import hash_bucket
+
+    ids = normalize_ids(spark, ids, "id")
+    empty = ids.limit(0).withColumn("component", F.col("id"))
+    store = read_store(spark, store_path)
+    if store is None:
+        return empty, 0
+    n_buckets, _ = _resolve_n_buckets(spark, store_path, n_buckets)
+
+    delta, n_removed, touch_ids_j, tvals = _retract_on_driver(
+        spark, store, ids, n_buckets
+    ) or _retract_on_spark(store, ids, n_buckets)
+    if n_removed == 0:
+        return empty, 0
     carry = (
         store.filter(F.col("cb").isin(tvals))
         .join(touch_ids_j, "id", "left_anti")

@@ -55,9 +55,9 @@ def _checkpoint_ids(spark: SparkSession, ids) -> DataFrame:
     if isinstance(ids, DataFrame):
         df = ids.select(F.col(ids.columns[0]).alias("__fid"))
     else:
-        from arrowhouse_spark.sources.memory import one_block
+        from arrowhouse_spark.operators.store import long_frame
 
-        df = one_block(spark, [(int(i),) for i in ids], "__fid long")
+        df = long_frame(spark, {"__fid": [int(i) for i in ids]})
     return df.distinct().localCheckpoint()
 
 

@@ -21,6 +21,12 @@ every caller, so the shuffled volume is delta-sized, not store-sized.
 Both regimes produce IDENTICAL results (a join hint never changes
 semantics) — pinned in tests/test_components.py / test_clustering.py by
 running the same retract with the limit forced to 0.
+
+The same limit bounds what a store operation may collect to the driver:
+the components store (operators/components.py) solves a fold's or a
+retract's touched subgraph there, as plain Python rows, only while the
+subgraph holds at most :data:`BROADCAST_ID_LIMIT` rows, and runs its
+cluster path above that. Forcing the limit to 0 drives that path too.
 """
 
 from __future__ import annotations
@@ -29,8 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Above this many ids the broadcast hint is dropped in favor of a shuffle
-# join. Tests monkeypatch this to 0 to drive the shuffle regime on small
-# fixtures; read at call time, never captured.
+# join, and the components store solves on the cluster, not the driver.
+# Tests monkeypatch this to 0 to drive both regimes on small fixtures;
+# read at call time, never captured.
 BROADCAST_ID_LIMIT = 1_000_000
 
 

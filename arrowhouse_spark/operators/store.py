@@ -195,13 +195,22 @@ def read_store(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
+def long_frame(spark: SparkSession, columns: dict, schema=None) -> DataFrame:
+    """A driver-side relation of ``long`` columns (name -> list of ints),
+    shipped to the JVM as one Arrow table: no Python-RDD slice, so its
+    scans start no Python worker. ``schema`` (a StructType) casts the
+    columns to the caller's integer types."""
+    import pyarrow as pa
+
+    table = pa.table({k: pa.array(v, pa.int64()) for k, v in columns.items()})
+    return spark.createDataFrame(table, schema)
+
+
 def normalize_ids(spark: SparkSession, ids, id_col: str) -> DataFrame:
     """``ids`` (sequence or DataFrame carrying ``id_col``) → distinct
     one-column relation named ``id_col``, pinned by its first action."""
     if not isinstance(ids, DataFrame):
-        from arrowhouse_spark.sources.memory import one_block
-
-        ids = one_block(spark, [(int(i),) for i in ids], f"{id_col} long")
+        ids = long_frame(spark, {id_col: [int(i) for i in ids]})
     return ids.select(id_col).distinct().localCheckpoint(eager=False)
 
 
